@@ -14,25 +14,10 @@ import os
 import sys
 import time
 
-from universal_data_to_orc_converter_spark.registry import load_all_queries
+from universal_data_to_orc_converter_spark.registry import HEADLINE, load_all_queries
 from universal_data_to_orc_converter_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-#: Queries timed per round: the flagship star-join, the wide aggregate
-#: scan, a fact-fact shuffle join, grouped top-k (window), MinHash-LSH
-#: dedup, cosine top-k, event-time windowing, and text stats — one per
-#: operator family, covering every shuffle pattern the engine uses.
-HEADLINE = [
-    "flagship_revenue_by_nation",
-    "op_agg_groupby",
-    "op_join_shuffle",
-    "op_win_topk_group",
-    "op_dedup_minhash_lsh",
-    "op_sim_topk",
-    "op_stream_tumbling",
-    "op_text_stats",
-]
 
 
 def run_query(spark, fn, sf_dir: str) -> float:

@@ -8,20 +8,10 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-from universal_data_to_orc_converter_spark.registry import load_all_queries
+from universal_data_to_orc_converter_spark.registry import HEADLINE, load_all_queries
 from universal_data_to_orc_converter_spark.session import get_spark
 
 SF = "/root/testdata/sf0.1"
-HEADLINE = [
-    "flagship_revenue_by_nation",
-    "op_agg_groupby",
-    "op_join_shuffle",
-    "op_win_topk_group",
-    "op_dedup_minhash_lsh",
-    "op_sim_topk",
-    "op_stream_tumbling",
-    "op_text_stats",
-]
 
 def main():
     suffix = sys.argv[1]

@@ -102,3 +102,30 @@ def assert_frames_match(spark_df, duck_rel, name="", allow_complex=False):
         (a, b) for a, b in zip(s_sorted, d_sorted) if a != b
     ]
     assert not mism, f"{name}: {len(mism)} mismatched rows; first: {mism[:3]}"
+
+
+def _write_documents(spark, tmp_path, docs):
+    """Write a documents.parquet fixture with the catalog schema."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": list(range(len(docs))),
+            "text": docs,
+            "lang": ["en"] * len(docs),
+            "source": ["test"] * len(docs),
+            "n_chars": [len(d) for d in docs],
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    df = df.selectExpr(
+        "CAST(doc_id AS BIGINT) doc_id",
+        "text",
+        "lang",
+        "source",
+        "CAST(n_chars AS BIGINT) n_chars",
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    return str(tmp_path)

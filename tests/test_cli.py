@@ -332,3 +332,55 @@ def test_wizard_answers_file_replay(spark, tmp_path, capsys):
             ask_secret=lambda p: "",
             say=lines.append,
         )
+
+
+def test_wizard_workers_reach_jdbc_num_partitions(monkeypatch, spark):
+    """The 'Parallel workers [4]' answer must arrive at convert_mysql
+    as num_partitions (ADVICE r2: it was silently discarded)."""
+    from universal_data_to_orc_converter_spark import wizard
+
+    seen = {}
+
+    def fake_convert_mysql(spark_, cfg, out_dir, tables, compression, **kw):
+        seen["num_partitions"] = kw.get("num_partitions")
+        return {}
+
+    import universal_data_to_orc_converter_spark.converter as conv
+
+    monkeypatch.setattr(conv, "convert_mysql", fake_convert_mysql)
+    answers = iter(
+        [
+            "1",  # MySQL
+            "dbhost",  # host
+            "3306",  # port
+            "u",  # user
+            "db",  # database
+            "y",  # export all tables
+            "./out",  # output dir
+            "zstd",  # compression
+            "11",  # parallel workers
+        ]
+    )
+    rc = wizard.run_wizard(
+        spark,
+        ask=lambda _p: next(answers),
+        ask_secret=lambda _p: "pw",
+        say=lambda _m: None,
+    )
+    assert rc == 0
+    assert seen["num_partitions"] == 11
+
+
+def test_answers_file_hash_answer_and_crlf(tmp_path):
+    """A lone '#' line and '# ...' lines are comments; '#x' or '#' as
+    a recorded ANSWER must survive; CRLF endings are stripped."""
+    from universal_data_to_orc_converter_spark.wizard import (
+        answers_from_file,
+    )
+
+    af = tmp_path / "a.txt"
+    af.write_bytes(b"# comment\r\n#\r\n3\r\n#|\r\n\r\n")
+    ask = answers_from_file(str(af))
+    assert ask("choice") == "3"
+    assert ask("delimiter") == "#|"
+    assert ask("header") == ""

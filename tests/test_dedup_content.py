@@ -9,7 +9,7 @@ from hashlib import blake2b
 
 from universal_data_to_orc_converter_spark.registry import load_all_queries
 
-from .test_advice_r2 import _write_documents
+from .conftest import _write_documents
 
 _M = (1 << 64) - 1
 _K1 = 0xBF58476D1CE4E5B9
@@ -945,3 +945,17 @@ def test_minhash_tier_tokenizes_like_exact_tier_on_raw_text(
                 assert len(exact[i] & exact[j]) == len(
                     approx[i] & approx[j]
                 ), (i, j)
+
+
+def test_minhash_survives_short_docs(spark, tmp_path):
+    """<3-token docs must collapse to a whole-doc shingle, not throw."""
+    near_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    near_b = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
+    sf = _write_documents(
+        spark, tmp_path, ["one", "two words", near_a, near_b, ""]
+    )
+    q = load_all_queries()["op_dedup_minhash_lsh"]
+    rows = q.fn(spark, sf).collect()  # round 1: ANSI crash here
+    pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
+    # the two long near-dups (90% token overlap) should still pair up
+    assert (2, 3) in pairs

@@ -80,3 +80,25 @@ def test_convert_dump_table_subset(spark, tmp_path):
     )
     written = convert_sql_dump(spark, str(p), str(tmp_path / "o"), tables=["a"])
     assert set(written) == {"a"}
+
+
+def test_jdbc_scratch_root_is_reused():
+    """_scratch returns the same directory per prefix within a
+    process, so repeated query invocations do not accumulate orphan
+    Derby databases (ADVICE r2)."""
+    from universal_data_to_orc_converter_spark.operators.io import _scratch
+
+    a = _scratch("scratch_reuse_test_")
+    b = _scratch("scratch_reuse_test_")
+    assert a == b
+
+
+def test_export_tables_accepts_num_partitions():
+    """export_tables' signature carries the wizard's worker count."""
+    import inspect
+
+    from universal_data_to_orc_converter_spark.sources.jdbc import (
+        export_tables,
+    )
+
+    assert "num_partitions" in inspect.signature(export_tables).parameters

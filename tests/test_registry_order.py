@@ -1,200 +1,20 @@
-"""The driver's correctness harness only records the first 50 queries
-returned by ``queries()`` (round-1 finding). Pin that window: exactly
-50 priority names, all registered, and at least one representative of
-every SURVEY.md §2 family inside it."""
+"""``queries()`` order: the bench's headliners first, then every other
+query in registration order."""
 
 from __future__ import annotations
 
 from universal_data_to_orc_converter_spark.registry import (
-    DRIVER_PRIORITY,
+    HEADLINE,
+    QUERIES,
     load_all_queries,
 )
-
-FAMILY_REPS = {
-    "A_io": {"op_orc_roundtrip", "op_jdbc_roundtrip", "op_cdc_merge",
-             "op_jsonl_roundtrip", "op_schema_evolution_scan",
-             "op_jsonl_corrupt_scan", "op_compact_small_files",
-             # r5 additions — all genuinely io/maintenance ops
-             "op_incremental_distinct_maintain", "op_quality_audit",
-             "op_zorder_clustered_scan", "op_scd2_build",
-             "op_surrogate_key", "op_incremental_file_ingest",
-             "op_python_datasource_writer", "op_manifest_audit",
-             # r6 additions — io (operators/io.py) and maintenance ops
-             "op_bucket_pruned_lookup", "op_fixed_width_roundtrip",
-             "op_time_travel_read", "op_quantile_histogram_maintain",
-             "op_incremental_agg_maintain"},
-    "B_relational": {"op_filter", "op_filter_date", "op_project",
-                     "op_filter_compound", "op_unpivot",
-                     "op_sql_passthrough", "op_select_star"},
-    "C_joins": {"flagship_revenue_by_nation", "op_join_asof",
-                "op_join_multiway", "op_join_salted",
-                "op_join_broadcast", "op_join_shuffle",
-                "op_join_outer", "op_join_semi", "op_join_nullsafe",
-                "op_join_range_bucketized",
-                # r5 additions
-                "op_partition_pruned_join", "op_join_fuzzy_blocked",
-                "op_federated_join", "op_join_interval_overlap"},
-    "D_aggregates": {"op_agg_groupby", "op_agg_percentile", "op_agg_stats",
-                     "op_agg_salted_twophase", "op_agg_global",
-                     "op_agg_having", "op_histogram", "op_agg_rollup",
-                     "op_agg_cube", "op_agg_gsets",
-                     "op_agg_count_distinct", "op_agg_conditional",
-                     "op_agg_listagg", "op_agg_bitwise", "op_row_count",
-                     # r5 additions
-                     "op_agg_grouping_id", "op_agg_bucketed_no_shuffle",
-                     "op_skew_profile", "op_winsorize",
-                     "op_observed_metrics",
-                     # r6 additions (operators/aggregates.py)
-                     "op_heavy_hitters_son",
-                     "op_distinct_intersection_kmv"},
-    "E_windows": {"op_win_rank", "op_win_lag_lead", "op_win_frame",
-                  "op_win_topk_group", "op_win_range_frame",
-                  "op_win_rank_family", "op_win_first_last",
-                  "op_latest_by_key", "op_win_time_range",
-                  # r5 additions
-                  "op_time_weighted_avg", "op_ewma",
-                  "op_win_rolling_median"},
-    "F_sorts": {"op_sort", "op_topk", "op_limit_offset"},
-    "G_setops": {"op_union_all", "op_intersect", "op_union_mixed_schema",
-                 "op_union_distinct", "op_except"},
-    "H_scalar": {"op_str_funcs", "op_date_funcs", "op_math_funcs",
-                 "op_str_funcs2", "op_date_funcs2", "op_cond_funcs",
-                 "op_datediff", "op_cast", "op_regexp",
-                 "op_null_handling"},
-    "H_semistructured": {"op_json_funcs", "op_array_funcs", "op_map_funcs",
-                         "op_json_agg", "op_array_explode",
-                         "op_posexplode_outer",
-                         # r5 addition (Spark 4 VARIANT)
-                         "op_variant_extract"},
-    "I_dedup": {"op_dedup_embedding", "op_dedup_minhash_lsh",
-                "op_dedup_exact", "op_dedup_clusters",
-                "op_cluster_representative", "op_dedup_ngram_jaccard",
-                # r5 additions
-                "op_duplicate_ngram_spans", "op_stream_dedup_minhash"},
-    "I_similarity": {"op_sim_ann_ivf", "op_sim_ann_ivfpq", "op_sim_topk",
-                     "op_dedup_embedding_cell", "op_sim_ann_lsh",
-                     "op_embedding_quantize",
-                     # r5 additions (embedding linalg tier)
-                     "op_rank_fusion", "op_embedding_covariance",
-                     "op_pca_project", "op_kmeans"},
-    "I_multimodal": {"op_multimodal_meta", "op_multimodal_frames",
-                     "op_multimodal_decode", "op_multimodal_audio"},
-    "J_streaming": {"op_stream_tumbling", "op_stream_watermark",
-                    "op_stream_dedup", "op_stream_interval_join",
-                    "op_stream_availablenow", "op_stream_stateful",
-                    "op_stream_sliding", "op_stream_session",
-                    "op_stream_static_join", "op_stream_update_counts",
-                    "op_stream_sessionize",
-                    # r5 additions
-                    "op_stream_python_source", "op_stream_python_sink",
-                    "op_session_dynamic_gap",
-                    # r6 additions (streaming/batch_windows.py)
-                    "op_stream_dedup_within_watermark",
-                    "op_stream_interval_join_outer",
-                    "op_stream_interval_join_full",
-                    "op_stream_interval_join_right"},
-    "K_udf": {"op_udf_scalar", "op_udaf", "op_doc_winnow",
-              "op_cogroup_asof",
-              # r5 additions
-              "op_mapinarrow_norm", "op_python_udtf"},
-    "text": {"op_text_stats", "op_lang_id", "op_vocab_encode",
-             "op_pack_sequences", "op_text_quality", "op_tfidf_topterms",
-             "op_bm25", "op_span_corruption", "op_token_count",
-             # r5 additions (tokenizer/LM toolchain)
-             "op_doc_chunk", "op_bpe_pair_counts", "op_bpe_train",
-             "op_bpe_apply", "op_ngram_lm_counts",
-             # r6 additions (operators/text.py — curation signals)
-             "op_span_excise", "op_lm_doc_score",
-             "op_lm_doc_score_heldout", "op_doc_self_repetition",
-             "op_doc_duplication_coverage"},
-    "sampling": {"op_stratified_sample", "op_domain_mixture",
-                 "op_shard_assign", "op_grouped_sample",
-                 # r6 additions (operators/sampling.py — loader tier)
-                 "op_epoch_shuffle", "op_length_bucketed_batching"},
-    "subquery": {"op_subquery_scalar", "op_subquery_correlated",
-                 # r6 additions (operators/subqueries.py — SQL surfaces)
-                 "op_recursive_cte", "op_sql_pipe_syntax"},
-}
-
-
-def test_priority_window_is_exactly_50():
-    assert len(DRIVER_PRIORITY) == 50
-    assert len(set(DRIVER_PRIORITY)) == 50
-
-
-def test_priority_names_lead_registration_order():
-    names = list(load_all_queries())
-    assert tuple(names[:50]) == DRIVER_PRIORITY
-
-
-def test_every_family_inside_driver_window():
-    """Every SURVEY §2 family keeps a seat in the window UNLESS every
-    one of its members' latest driver rows is already within the
-    staleness budget — the seat requirement exists to bound
-    verification age, so a uniformly-fresh family may yield its seat to
-    stale names from other families for one rotation (r7: sorts,
-    setops, relational, multimodal are all ≥ r4-fresh and yield to the
-    26 r2-stale names + 22 never-verified r6 registrations)."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts",
-        ),
-    )
-    import staleness_audit
-
-    window = set(list(load_all_queries())[:50])
-    for family, reps in FAMILY_REPS.items():
-        assert reps & window or staleness_audit.family_is_fresh(reps), (
-            f"family {family} has no query in the first 50 and at least "
-            f"one member is past the staleness budget"
-        )
 
 
 def test_no_queries_lost_by_reordering():
     names = list(load_all_queries())
-    assert len(names) == len(set(names))
-    assert len(names) >= 102
+    assert len(names) == len(set(names)) == len(QUERIES)
+    assert len(names) >= 258
 
 
-def test_no_silent_post_freeze_registration():
-    """Round 4 silently accumulated 14 queries registered after the
-    driver window froze — locally green but externally unverified for a
-    whole round. Make that state unreachable: every registered name
-    must be inside the pinned window, already driver-verified in a
-    prior round (a CORRECTNESS_r*.json row), or explicitly acknowledged
-    in the CURRENT round's BELOW_FOLD_R{N} set (resolved dynamically so
-    the rotation rename can't silently detach this gate)."""
-    import glob
-    import json
-    import os
-
-    import universal_data_to_orc_converter_spark.registry as reg
-
-    bf_names = sorted(
-        (n for n in dir(reg) if n.startswith("BELOW_FOLD_R")),
-        key=lambda n: int(n.rsplit("R", 1)[1]),
-    )
-    assert bf_names, "registry must carry a BELOW_FOLD_R{N} constant"
-    below_fold = getattr(reg, bf_names[-1])
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    verified: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        verified |= set(json.load(open(path)))
-    unaccounted = [
-        n
-        for n in load_all_queries()
-        if n not in DRIVER_PRIORITY
-        and n not in verified
-        and n not in below_fold
-    ]
-    assert not unaccounted, (
-        f"queries registered after the driver window was pinned with no "
-        f"window slot and no below-fold tag: {unaccounted} — either seat "
-        f"them in DRIVER_PRIORITY or add them to {bf_names[-1]}"
-    )
+def test_priority_names_lead_registration_order():
+    assert tuple(load_all_queries())[: len(HEADLINE)] == HEADLINE

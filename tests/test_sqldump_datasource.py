@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import pytest
 
-from universal_data_to_orc_converter_spark.sources.sqldump import parse_dump
+from universal_data_to_orc_converter_spark.sources.sqldump import (
+    _parse_value,
+    parse_dump,
+)
 from universal_data_to_orc_converter_spark.sources.sqldump_datasource import (
     SqlDumpDataSource,
 )
@@ -122,3 +125,45 @@ def test_datasource_missing_table_errors(registered, tmp_path):
             .option("table", "missing")
             .load()
         )
+
+
+def test_datasource_multiple_statements_per_line(spark, tmp_path):
+    """Two top-level INSERTs on one physical line both yield rows, and a
+    statement that STARTS mid-line and closes on a later line parses
+    once."""
+    spark.dataSource.register(SqlDumpDataSource)
+    p = tmp_path / "multi.sql"
+    p.write_text(
+        "CREATE TABLE t (id INT, s VARCHAR(40));\n"
+        # two complete statements on one line (2nd was dropped pre-fix)
+        "INSERT INTO t VALUES (1, 'a;b');INSERT INTO t VALUES (2, 'c');\n"
+        # second statement starts mid-line, spans two lines
+        "INSERT INTO t VALUES (3, 'd');INSERT INTO t VALUES (4,\n"
+        "'e');\n"
+        "INSERT INTO t VALUES (5, 'plain');\n"
+    )
+    df = (
+        spark.read.format("sqldump")
+        .option("path", str(p))
+        .option("table", "t")
+        .load()
+    )
+    got = sorted((r["id"], r["s"]) for r in df.collect())
+    assert got == [(1, "a;b"), (2, "c"), (3, "d"), (4, "e"), (5, "plain")]
+
+
+def test_parse_value_escape_ordering():
+    # backslash-escaped quote pair: must NOT collapse to a single quote
+    assert _parse_value(r"'a\'\'b'") == "a''b"
+    # doubled-quote escape
+    assert _parse_value("'a''b'") == "a'b"
+    # doubled double-quote inside double-quoted literal
+    assert _parse_value('"x""y"') == 'x"y'
+    # backslash escapes still work, incl. literal backslash
+    assert _parse_value(r"'c\\d'") == "c\\d"
+    assert _parse_value(r"'l1\nl2\tt'") == "l1\nl2\tt"
+    # a literal backslash followed by a real doubled-quote pair
+    assert _parse_value(r"'p\\''q'") == "p\\'q"
+    # MySQL: unknown escape drops the backslash
+    assert _parse_value(r"'\x'") == "x"
+    assert _parse_value("NULL") is None

@@ -69,7 +69,6 @@ def op_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus
     """,
-    headline=True,
     notes="TPC-H Q1 pricing summary — the canonical wide-agg scan.",
     tags=("agg", "flagship"),
 )

@@ -42,7 +42,6 @@ from ..registry import query
         GROUP BY n.n_name
         ORDER BY revenue DESC, n_name
     """,
-    headline=True,
     notes="Flagship: scan+filter+3 joins+agg+sort in one plan. "
     "nation hinted broadcast; customer left to stats/AQE (broadcast "
     "at fixture scale, sort-merge at 100 TB); lineitem⋈orders "

@@ -483,6 +483,13 @@ def _unit_vectors(em: DataFrame) -> DataFrame:
     )
 
 
+#: Partitions of the IVF quantizer's training input. KMeans' seeded
+#: k-means|| init samples partition by partition, so the fit reads a
+#: fixed hash layout sorted by vec_id: the centroids then depend on the
+#: corpus and the seed, never on the host's core count.
+_FIT_PARTITIONS: int = 32
+
+
 def _ivf_index(
     spark: SparkSession, unit: DataFrame, n_cells: int, n_assign: int = 1
 ) -> tuple[DataFrame, DataFrame]:
@@ -510,7 +517,12 @@ def _ivf_index(
     from pyspark.sql import Window as W
 
     km = KMeans(k=n_cells, seed=42, maxIter=5, featuresCol="features")
-    model = km.fit(unit.select(array_to_vector("u").alias("features")))
+    fit_input = (
+        unit.repartition(_FIT_PARTITIONS, "vec_id")
+        .sortWithinPartitions("vec_id")
+        .select(array_to_vector("u").alias("features"))
+    )
+    model = km.fit(fit_input)
     centers = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]

@@ -4,7 +4,8 @@ Every operator from SURVEY.md §2 lands here as a named query:
 a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus (when the
 semantics are SQL-expressible) an equivalent ANSI-SQL oracle string that
 DuckDB runs over the same parquet fixtures. ``__spark_entry__.py``
-re-exports this registry verbatim.
+re-exports this registry verbatim, headliners first, then registration
+order.
 
 Conventions that keep the Spark result and the DuckDB oracle
 bit-identical (the driver compares row count + schema + an
@@ -41,8 +42,6 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None = None
-    #: headline queries are timed by bench.py
-    headline: bool = False
     #: free-form notes for the judge (scale posture, why rows-only, ...)
     notes: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
@@ -54,7 +53,6 @@ QUERIES: dict[str, QuerySpec] = {}
 def query(
     name: str,
     oracle: str | None = None,
-    headline: bool = False,
     notes: str = "",
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
@@ -65,115 +63,33 @@ def query(
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = QuerySpec(name, fn, oracle, headline, notes, tags)
+        QUERIES[name] = QuerySpec(name, fn, oracle, notes, tags)
         return fn
 
     return deco
 
 
-#: The external driver's correctness harness caps at the FIRST 50
-#: queries in registration order (observed in rounds 1-2: exactly the
-#: first 50 got CORRECTNESS rows). This list pins the first 50; it is
-#: ROTATED each round (COVERAGE.md tracks which rounds verified which
-#: queries) so every query is eventually externally verified,
-#: prioritizing (a) queries with no driver row in ANY round,
-#: (b) operators modified this round, then (c) the stalest
-#: previously-verified queries, while keeping ≥1 representative of
-#: every SURVEY.md §2 family inside the cap. Everything below the fold
-#: is covered by the identical local oracle harness
-#: (tests/test_oracle.py) every round.
-#: The round this DRIVER_PRIORITY window was rotated FOR. The staleness
-#: gates (scripts/staleness_audit.py) enforce the budget floor relative
-#: to THIS round, not to the newest CORRECTNESS file on disk — so when
-#: the external driver commits CORRECTNESS_r{WINDOW_ROUND}.json between
-#: rounds (bumping the inferred current round before the next builder
-#: session rotates), the committed tree stays green instead of tripping
-#: the gates at handoff (the r9 verdict's "red suite at handoff" item).
-#: A separate lag guard (tests/test_staleness_budget.py) fails if the
-#: window ever falls MORE than one round behind the ledger, so the
-#: rotation still cannot be skipped.
-WINDOW_ROUND: int = 15
-
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # headline flagship — always in the window
+#: The queries bench.py times, in its order: the flagship star-join,
+#: the wide aggregate scan, a fact-fact shuffle join, grouped top-k
+#: (window), MinHash-LSH dedup, cosine top-k, event-time windowing and
+#: text stats — one per operator family. ``load_all_queries`` returns
+#: them first.
+HEADLINE: tuple[str, ...] = (
     "flagship_revenue_by_nation",
-    # Inherited-state catch-up (r16): the r15 optimization round did not
-    # rotate the window (it carried the r14 pin), so the ledger is one
-    # rotation ahead and two stale cohorts (24 r9 names, 43 r10 names)
-    # are queued. One 50-seat window cannot refresh both cohorts, so the
-    # pin advances one round (15 — lag 1, the maximum the gate allows)
-    # and the seats go stalest-first: all 24 r9 names plus the first 25
-    # r10 names in registration order (rotate_window.py proposal,
-    # CORRECTNESS_r15 had zero red rows and the below-fold queue is
-    # empty). The 18 remaining r10 names are within next rotation's
-    # capacity (look-ahead gate: 18 <= 50).
-    "op_join_theta",
-    "op_join_salted",
-    "op_tpch_q3_shipping_priority",
-    "op_tpch_q18_large_orders",
-    "op_latest_by_key",
-    "op_tpch_q13_order_counts",
-    "op_tpch_q7_nation_volume",
-    "op_tpch_q10_returned_items",
-    "op_join_asof_nearest",
-    "op_quantile_histogram_maintain",
-    "op_heavy_hitters_maintain",
-    "op_project",
-    "op_filter_compound",
-    "op_unpivot",
-    "op_sql_passthrough",
-    "op_union_mixed_schema",
-    "op_topk",
-    "op_text_normalize",
-    "op_pandas_api",
-    "op_arrow_interchange",
-    "op_retention_cohorts",
-    "op_time_gapfill",
-    "op_stream_heavy_hitters",
-    "op_stream_quantiles",
-    "op_row_count",
-    "op_agg_count_distinct",
-    "op_agg_rollup",
-    "op_agg_cube",
-    "op_agg_gsets",
-    "op_agg_conditional",
-    "op_agg_listagg",
-    "op_agg_bitwise",
-    "op_grouped_sample",
+    "op_agg_groupby",
+    "op_join_shuffle",
+    "op_win_topk_group",
     "op_dedup_minhash_lsh",
-    "op_dedup_url_canonical",
-    "op_jsonl_corrupt_scan",
-    "op_compact_small_files",
-    "op_xml_roundtrip",
-    "op_join_outer",
-    "op_join_semi",
-    "op_join_range_bucketized",
-    "op_join_nullsafe",
-    "op_tpch_q4_order_priority",
-    "op_tpch_q14_promo_share",
-    "op_tpch_q19_disjunctive",
-    "op_snapshot_diff",
-    "op_select_star",
-    "op_union_distinct",
-    "op_except",
+    "op_sim_topk",
+    "op_stream_tumbling",
+    "op_text_stats",
 )
-
-#: Names registered AFTER this round's DRIVER_PRIORITY was pinned that
-#: deliberately wait below the fold for the next rotation. Every
-#: registered query must be (1) in DRIVER_PRIORITY, (2) already
-#: driver-verified in a prior round's CORRECTNESS file, or (3) listed
-#: here — tests/test_registry_order.py fails otherwise, so a
-#: post-freeze registration can never again be silently unverified
-#: (r4 accumulated 14 such names before this gate existed). Rounds 9
-#: through 14 registered zero new names (depth over breadth — capacity
-#: budget 258/295), so the set is empty; new r14 registrations would
-#: accumulate here and get first-in-line priority for the r15 rotation.
-BELOW_FOLD_R14: frozenset[str] = frozenset()
 
 
 def load_all_queries() -> dict[str, QuerySpec]:
     """Import every module that registers queries, then return the
-    registry with ``DRIVER_PRIORITY`` names first (see above)."""
+    registry with the ``HEADLINE`` names first, then everything else in
+    registration order."""
     # Imports are side-effecting registrations; keep the list explicit so
     # a missing module is an ImportError, not silent lost coverage.
     from .operators import (  # noqa: F401
@@ -209,10 +125,7 @@ def load_all_queries() -> dict[str, QuerySpec]:
         heavy_hitters_stream,
     )
 
-    missing = [n for n in DRIVER_PRIORITY if n not in QUERIES]
-    if missing:
-        raise KeyError(f"DRIVER_PRIORITY names not registered: {missing}")
-    ordered = {n: QUERIES[n] for n in DRIVER_PRIORITY}
+    ordered = {n: QUERIES[n] for n in HEADLINE}
     ordered.update((n, s) for n, s in QUERIES.items() if n not in ordered)
     return ordered
 

@@ -24,15 +24,34 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 #: Split size for file scans. The cluster-right default is Spark's
-#: 128 MB; the local harness reads ~10 MB fixture files on 32 cores,
+#: 128 MB; the local harness reads ~10 MB fixture files on many cores,
 #: so smaller splits keep the scan parallel. Cluster deploys should
 #: export SPARK_GRAFT_MAX_PARTITION_BYTES=128m (or leave Spark's
 #: default by setting it to "").
 DEFAULT_MAX_PARTITION_BYTES = os.environ.get(
     "SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"
 )
+
+#: The engine's runtime-settable posture: ``get_spark`` builds every
+#: session with it and ``tune_session`` sets it on a session built
+#: elsewhere. An empty value leaves Spark's default.
+SESSION_CONF: dict[str, str] = {
+    "spark.sql.shuffle.partitions": DEFAULT_SHUFFLE_PARTITIONS,
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.orc.filterPushdown": "true",
+    "spark.sql.orc.enableVectorizedReader": "true",
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.files.maxPartitionBytes": DEFAULT_MAX_PARTITION_BYTES,
+}
+
+
+def _posture() -> dict[str, str]:
+    return {k: v for k, v in SESSION_CONF.items() if v}
 
 
 def get_spark(
@@ -43,25 +62,19 @@ def get_spark(
     config. ``extra_conf`` entries are applied last (pre-JVM settings
     like ``spark.eventLog.*`` only take effect when no session exists
     yet — the diagnostics scripts' use case)."""
-    builder = (
-        SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.orc.filterPushdown", "true")
-        .config("spark.sql.orc.enableVectorizedReader", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.files.maxPartitionBytes", DEFAULT_MAX_PARTITION_BYTES)
-        .config("spark.ui.enabled", "false")
+    conf = {
+        **_posture(),
+        # Arrow changes how the session owner's toPandas converts
+        # results, so it is set only on sessions built here
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.ui.enabled": "false",
         # no \r progress-bar spam in archived bench/driver logs
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.ui.showConsoleProgress": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder.master(f"local[{DEFAULT_CPUS}]").appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -71,12 +84,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
     provided session (the driver hands ``queries()`` callables its own
     session; timezone and AQE are runtime-configurable, so we set them
     here instead of trusting the ambient config)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
-    if DEFAULT_MAX_PARTITION_BYTES:
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", DEFAULT_MAX_PARTITION_BYTES
-        )
+    for k, v in _posture().items():
+        spark.conf.set(k, v)
     return spark
