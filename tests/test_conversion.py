@@ -132,6 +132,32 @@ def test_split_statements_ignores_quoted_semicolons():
     assert "semicolons" in stmts[1]
 
 
+# every chunk-boundary hazard of the streaming splitter: '-'+'-' and
+# '/'+'*' across a cut, ';' inside quotes and comments, \' and '' (a
+# closed quote that the next chunk may reopen), and a last statement
+# with no terminator or newline
+CUT_DUMP = (
+    "-- header; with a semicolon\n"
+    "/* block; comment */CREATE TABLE t (a INT, b TEXT);\n"
+    "INSERT INTO t VALUES (1,'x;y\\'z'),(2,'it''s; ok');-- trailing\n"
+    'INSERT INTO t VALUES (3,"d;\\"q""");\n'
+    "/*x*/INSERT INTO t VALUES (-4,'-- not /* a comment */ ;')"
+)
+
+
+def test_split_statements_same_at_every_two_chunk_cut():
+    whole = list(split_statements(iter([CUT_DUMP])))
+    assert whole == [
+        "CREATE TABLE t (a INT, b TEXT)",
+        "INSERT INTO t VALUES (1,'x;y\\'z'),(2,'it''s; ok')",
+        'INSERT INTO t VALUES (3,"d;\\"q""")',
+        "INSERT INTO t VALUES (-4,'-- not /* a comment */ ;')",
+    ]
+    for cut in range(len(CUT_DUMP) + 1):
+        chunks = iter([CUT_DUMP[:cut], CUT_DUMP[cut:]])
+        assert list(split_statements(chunks)) == whole, cut
+
+
 def test_parse_create_table_types():
     td = parse_create_table(list(split_statements(iter([DUMP])))[0])
     assert td.name == "users"
@@ -142,6 +168,16 @@ def test_parse_create_table_types():
     assert isinstance(cols["joined"], T.DateType)
     assert isinstance(cols["last_seen"], T.TimestampType)
     assert "PRIMARY" not in cols  # constraints skipped
+
+
+def test_parse_create_table_backslash_escaped_comment():
+    """A backslash-escaped quote inside a column COMMENT must not end
+    the literal: its '(' would otherwise hide the next column's type."""
+    td = parse_create_table(
+        r"CREATE TABLE t (a VARCHAR(10) COMMENT 'it\'s (x', b INT)"
+    )
+    assert [c for c, _ in td.columns] == ["a", "b"]
+    assert isinstance(dict(td.columns)["b"], T.LongType)
 
 
 def test_parse_insert_adversarial_literals():
@@ -181,6 +217,17 @@ def test_dump_to_orc_end_to_end(spark, tmp_path):
     users = read_orc(spark, written["users"])
     assert users.count() == 3
     assert isinstance(users.schema["balance"].dataType, T.DecimalType)
+
+
+def test_convert_sql_dump_missing_table_raises(spark, tmp_path):
+    """A requested table the dump never defines is an error naming it,
+    not a silent conversion of nothing."""
+    p = tmp_path / "d.sql"
+    p.write_text(DUMP)
+    out = tmp_path / "orc"
+    with pytest.raises(ValueError, match="'nope'.*no CREATE TABLE"):
+        convert_sql_dump(spark, str(p), str(out), tables=["users", "nope"])
+    assert not out.exists()
 
 
 def test_mysql_type_mapping():

@@ -152,6 +152,29 @@ def test_datasource_multiple_statements_per_line(spark, tmp_path):
     assert got == [(1, "a;b"), (2, "c"), (3, "d"), (4, "e"), (5, "plain")]
 
 
+def test_malformed_values_are_null_in_both_readers(registered, tmp_path):
+    """MySQL's zero dates and text in an INT column are NULL from both
+    readers; under ANSI casts the driver-side parser used to fail the
+    whole conversion with CAST_INVALID_INPUT."""
+    spark = registered
+    p = tmp_path / "zero.sql"
+    p.write_text(
+        "CREATE TABLE z (id INT, d DATE, ts DATETIME, n INT);\n"
+        "INSERT INTO z VALUES (1, '0000-00-00', '0000-00-00 00:00:00', 'x'),"
+        "(2, '2024-01-02', '2024-01-02 03:04:05', 7);\n"
+    )
+    via_ds = (
+        spark.read.format("sqldump")
+        .option("path", str(p))
+        .option("table", "z")
+        .load()
+    )
+    rows = sorted(map(tuple, via_ds.collect()))
+    assert rows == sorted(map(tuple, parse_dump(spark, str(p))["z"].collect()))
+    assert rows[0] == (1, None, None, None)
+    assert rows[1][3] == 7
+
+
 def test_parse_value_escape_ordering():
     # backslash-escaped quote pair: must NOT collapse to a single quote
     assert _parse_value(r"'a\'\'b'") == "a''b"

@@ -14,12 +14,38 @@ import glob as _glob
 import os
 from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
+from .progress import write_with_progress
 from .sinks.orc import write_orc
 from .sources.csv import read_csv
-from .sources.jdbc import JdbcConfig, export_tables
-from .sources.sqldump import dump_to_orc
+from .sources.jdbc import JdbcConfig, list_tables, partition_bounds, read_table
+from .sources.sqldump import parse_dump
+
+
+def _write_tables(
+    spark: SparkSession,
+    names: list[str],
+    frame: Callable[[str], DataFrame],
+    output_dir: str,
+    compression: str,
+    report: Callable[[str], None] | None,
+) -> dict[str, str]:
+    """The table loop of every conversion: ``frame(name)`` → the ORC
+    directory ``output_dir/name``, one table after another, each frame
+    built just before its write. ``report`` narrates per-table progress
+    (the reference's sh:249 progress lines; see progress.py for the
+    distributed analog) — None keeps the write silent and the plan
+    hook-free."""
+    written = {}
+    for i, name in enumerate(names, 1):
+        out = os.path.join(output_dir, name)
+        write_with_progress(
+            spark, frame(name), name, i, len(names), report,
+            lambda d, out=out: write_orc(d, out, compression=compression),
+        )
+        written[name] = out
+    return written
 
 
 def convert_csv(
@@ -35,29 +61,23 @@ def convert_csv(
     """CSV file/dir → ORC. A directory input becomes one table per CSV
     file (the reference's file-per-table CSV layout, sh:464-465 — note
     it diverges from the dir-per-table layout of the other paths; we
-    keep dir-per-table uniformly). ``report`` narrates per-table
-    progress (the reference's sh:249 progress lines; see progress.py
-    for the distributed analog) — None keeps the write silent and the
-    plan hook-free."""
-    from .progress import write_with_progress
-
-    written = {}
+    keep dir-per-table uniformly)."""
     if os.path.isdir(input_path):
         files = sorted(_glob.glob(os.path.join(input_path, "*.csv")))
     else:
         files = [input_path]
-    for i, f in enumerate(files, 1):
-        name = os.path.splitext(os.path.basename(f))[0]
-        df = read_csv(
-            spark, f, delimiter=delimiter, header=header, infer_schema=infer_schema
-        )
-        out = os.path.join(output_dir, name)
-        write_with_progress(
-            spark, df, name, i, len(files), report,
-            lambda d, out=out: write_orc(d, out, compression=compression),
-        )
-        written[name] = out
-    return written
+    paths = {os.path.splitext(os.path.basename(f))[0]: f for f in files}
+    return _write_tables(
+        spark,
+        list(paths),
+        lambda name: read_csv(
+            spark, paths[name], delimiter=delimiter, header=header,
+            infer_schema=infer_schema,
+        ),
+        output_dir,
+        compression,
+        report,
+    )
 
 
 def convert_sql_dump(
@@ -68,9 +88,12 @@ def convert_sql_dump(
     tables: list[str] | None = None,
     report: Callable[[str], None] | None = None,
 ) -> dict[str, str]:
-    """SQL dump → typed ORC tables (see sources/sqldump.py)."""
-    return dump_to_orc(
-        spark, dump_path, output_dir, compression, tables, report=report
+    """SQL dump → typed ORC tables (see sources/sqldump.py); the
+    reference's EP3 (sql_dump_to_orc_converter.py, sh:403-415). A
+    listed table the dump does not define is a ``ValueError``."""
+    parsed = parse_dump(spark, dump_path, tables)
+    return _write_tables(
+        spark, list(parsed), parsed.__getitem__, output_dir, compression, report
     )
 
 
@@ -84,14 +107,24 @@ def convert_mysql(
     num_partitions: int = 8,
     report: Callable[[str], None] | None = None,
 ) -> dict[str, str]:
-    """MySQL → ORC via range-partitioned JDBC (see sources/jdbc.py)."""
-    return export_tables(
-        spark,
-        cfg,
-        output_dir,
-        tables,
-        compression,
-        partition_columns,
-        num_partitions,
-        report=report,
-    )
+    """MySQL → ORC via range-partitioned JDBC (see sources/jdbc.py); the
+    reference's EP2 (mysql_to_orc_converter.py, sh:280-289): every
+    table, or the listed ones. A table in ``partition_columns`` is read
+    in ``num_partitions`` key ranges between the column's MIN and MAX
+    (the wizard's "Parallel workers" answer lands here); an empty one
+    is read whole. Spark schedules a table's partitions concurrently —
+    no 4-thread pool."""
+    if tables is None:
+        tables = [r[0] for r in list_tables(spark, cfg).collect()]
+    partition_columns = partition_columns or {}
+
+    def frame(table: str) -> DataFrame:
+        pc = partition_columns.get(table)
+        bounds = pc and partition_bounds(spark, cfg, table, pc)
+        if not bounds:
+            return read_table(spark, cfg, table)
+        return read_table(
+            spark, cfg, table, pc, *bounds, num_partitions=num_partitions
+        )
+
+    return _write_tables(spark, tables, frame, output_dir, compression, report)

@@ -155,55 +155,21 @@ def write_table(
     )
 
 
-def export_tables(
-    spark: SparkSession,
-    cfg: JdbcConfig,
-    output_dir: str,
-    tables: list[str] | None = None,
-    compression: str = "snappy",
-    partition_columns: dict[str, str] | None = None,
-    num_partitions: int = 8,
-    report=None,
-) -> dict[str, str]:
-    """The reference's EP2 end-to-end (mysql_to_orc_converter.py,
-    sh:280-289): every table (or a subset) → ORC dir per table. Spark
-    schedules tables' partitions concurrently — no 4-thread pool.
-    ``num_partitions`` bounds the per-table JDBC read parallelism
-    (the wizard's "Parallel workers" answer lands here)."""
-    import os
-
-    from ..sinks.orc import write_orc
-
-    from ..progress import write_with_progress
-
-    if tables is None:
-        tables = [r[0] for r in list_tables(spark, cfg).collect()]
-    written = {}
-    for i, t in enumerate(tables, 1):
-        pc = (partition_columns or {}).get(t)
-        if pc:
-            bounds = (
-                spark.read.format("jdbc")
-                .options(**cfg.reader_options())
-                .option("query", f"SELECT MIN({pc}) lo, MAX({pc}) hi FROM {t}")
-                .load()
-                .collect()[0]
-            )
-            df = read_table(
-                spark,
-                cfg,
-                t,
-                pc,
-                bounds["lo"],
-                bounds["hi"],
-                num_partitions=num_partitions,
-            )
-        else:
-            df = read_table(spark, cfg, t)
-        out = os.path.join(output_dir, t)
-        write_with_progress(
-            spark, df, t, i, len(tables), report,
-            lambda d, out=out: write_orc(d, out, compression=compression),
-        )
-        written[t] = out
-    return written
+def partition_bounds(spark: SparkSession, cfg, table: str, column: str) -> tuple | None:
+    """``(MIN, MAX)`` of ``column`` in ``table``: the bounds of a
+    range-partitioned ``read_table``, or None for an empty table. The
+    column is quoted by Spark's JDBC dialect for ``cfg.url`` (backticks
+    for MySQL, double quotes for Derby), so a case-folding database
+    keeps its spelling. The aliases are needed (Spark selects the
+    query's columns by name), but the row is read by position because
+    databases fold the case of unquoted aliases differently."""
+    dialect = spark._jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(cfg.url)
+    col = dialect.quoteIdentifier(column)
+    lo, hi = (
+        spark.read.format("jdbc")
+        .options(**cfg.reader_options())
+        .option("query", f"SELECT MIN({col}) lo, MAX({col}) hi FROM {table}")
+        .load()
+        .collect()[0]
+    )
+    return None if lo is None else (lo, hi)

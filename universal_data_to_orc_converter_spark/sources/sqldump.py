@@ -7,13 +7,18 @@ untyped, unnamed DataFrame (sh:382). That corrupts any string literal
 containing a comma, parenthesis, or semicolon, and throws away the
 DDL's column names and types.
 
-This module is the deliberate divergence (SURVEY.md §7): a real
-tokenizer that is quote-, escape-, and comment-aware, plus a
-CREATE TABLE reader that yields a typed Spark schema. Statements are
-split in a streaming pass (bounded memory — the reference reads the
-whole dump twice, sh:325/371); parsed rows are batched into Arrow-
-backed DataFrames, so the dump's rows are distributed the moment they
-leave the parser.
+This module is the deliberate divergence (SURVEY.md §7): one MySQL
+lexer, the compiled ``_TOKEN`` regex, is the only code that knows the
+quoting rules — 'single' and "double" strings with backslash and
+doubled-quote escapes, `backtick` identifiers, ``--`` and ``/* */``
+comments. Statement splitting, the CREATE TABLE column list (read as
+a typed Spark schema) and the INSERT value tuples are all walks over
+its tokens, and ``_parse_value`` decodes a literal's escapes with one
+``re.sub``; the distributed reader (``sqldump_datasource.py``) reuses
+the same functions. Statements are split in a streaming pass (bounded
+memory — the reference reads the whole dump twice, sh:325/371);
+parsed rows are batched into DataFrames, so the dump's rows are
+distributed the moment they leave the parser.
 
 Scale posture: a .sql dump is an inherently serial, single-machine
 ingest format — the parse is driver-side by design, but memory is
@@ -63,12 +68,31 @@ def mysql_type_to_spark(type_sql: str) -> T.DataType:
 
 
 # ---------------------------------------------------------------------------
-# Streaming statement splitter (quote/escape/comment aware)
+# The lexer: the one place that encodes MySQL's quote, escape and comment rules
 # ---------------------------------------------------------------------------
+
+#: An unterminated quote or comment runs to the end of the text (the
+#: ``\Z`` branches), so the tokens tile the text with no gaps: a caller
+#: can rebuild any span by joining them.
+_TOKEN = re.compile(
+    r"""
+      '[^'\\]*(?:(?:\\.|'')[^'\\]*)*(?:'|\\?\Z)   # 'string', \x and '' escapes
+    | "[^"\\]*(?:(?:\\.|"")[^"\\]*)*(?:"|\\?\Z)   # "string", \x and "" escapes
+    | `[^`]*(?:``[^`]*)*(?:`|\Z)                   # `identifier`
+    | --[^\n]*                                      # -- comment; the newline stays
+    | /\*.*?(?:\*/|\Z)                              # /* comment */
+    | [(),;]
+    | (?:[^'"`(),;/-]+|-(?!-)|/(?!\*))+             # any other text
+    """,
+    re.S | re.X,
+)
+_COMMENT = ("--", "/*")
+#: the tokens that stay whole whatever text follows them
+_PUNCT = frozenset("(),;")
 
 
 class StatementSplitter:
-    """Incremental quote/escape/comment-aware statement splitter.
+    """Incremental statement splitter over ``_TOKEN``.
 
     ``feed(text)`` returns the statements completed (by a top-level
     ``;``) within the text fed so far; ``pending`` is the unterminated
@@ -76,60 +100,38 @@ class StatementSplitter:
     caller can stream a file line-by-line without re-scanning — the
     distributed dump reader uses this to handle multiple statements on
     one physical line (and statements spanning several lines) without
-    dropping or duplicating any.
+    dropping or duplicating any. Comments are dropped from the
+    statements.
     """
 
     def __init__(self) -> None:
-        self._buf: list[str] = []
-        self._state: str | None = None  # None | "'" | '"' | '`' | '--' | '/*'
-        self._escape = False
-        self._prev = ""
+        self._parts: list[str] = []  # tokens of the open statement
+        # The last token fed: it touches the end of the text, so the
+        # next chunk may extend it ('-' + '-', '/' + '*', an open quote,
+        # or a closed one that a doubled quote reopens). Only it is
+        # lexed again with that chunk, so the work is linear in the
+        # text unless one token spans many chunks.
+        self._tail = ""
 
     def feed(self, text: str) -> list[str]:
         out: list[str] = []
-        buf, state, escape, prev = self._buf, self._state, self._escape, self._prev
-        for ch in text:
-            if state in ("'", '"', "`"):
-                buf.append(ch)
-                if escape:
-                    escape = False
-                elif ch == "\\" and state in ("'", '"'):
-                    escape = True
-                elif ch == state:
-                    state = None
-            elif state == "--":
-                if ch == "\n":
-                    state = None
-                    buf.append(ch)
-            elif state == "/*":
-                if prev == "*" and ch == "/":
-                    state = None
-            elif ch == ";":
-                stmt = "".join(buf).strip()
-                buf.clear()
+        parts = self._parts
+        toks = _TOKEN.findall(self._tail + text)
+        self._tail = toks.pop() if toks and toks[-1] not in _PUNCT else ""
+        for tok in toks:
+            if tok == ";":
+                stmt = "".join(parts).strip()
+                parts.clear()
                 if stmt:
                     out.append(stmt)
-            else:
-                if ch in ("'", '"', "`"):
-                    state = ch
-                    buf.append(ch)
-                elif prev == "-" and ch == "-" and state is None:
-                    state = "--"
-                    if buf and buf[-1] == "-":
-                        buf.pop()
-                elif prev == "/" and ch == "*":
-                    state = "/*"
-                    if buf and buf[-1] == "/":
-                        buf.pop()
-                else:
-                    buf.append(ch)
-            prev = ch
-        self._state, self._escape, self._prev = state, escape, prev
+            elif not tok.startswith(_COMMENT):
+                parts.append(tok)
         return out
 
     @property
     def pending(self) -> str:
-        return "".join(self._buf).strip()
+        tail = "" if self._tail.startswith(_COMMENT) else self._tail
+        return ("".join(self._parts) + tail).strip()
 
 
 def split_statements(chunks: Iterator[str]) -> Iterator[str]:
@@ -155,6 +157,36 @@ def _file_chunks(path: str, size: int = 1 << 20) -> Iterator[str]:
             yield chunk
 
 
+def _groups(text: str) -> Iterator[list[str]]:
+    """Yield each top-level ``( … )`` group of ``text`` as the list of
+    its top-level comma-separated items, comments dropped. A group
+    left open at the end of ``text`` is not yielded."""
+    depth = 0
+    items: list[str] = []
+    cur: list[str] = []
+    for tok in _TOKEN.findall(text):
+        if tok == "(":
+            depth += 1
+            if depth == 1:
+                items, cur = [], []
+                continue
+        elif tok == ")" and depth:
+            depth -= 1
+            if depth == 0:
+                if cur:
+                    items.append("".join(cur))
+                yield items
+                continue
+        elif tok == "," and depth == 1:
+            items.append("".join(cur))
+            cur = []
+            continue
+        elif tok.startswith(_COMMENT):
+            continue
+        if depth:
+            cur.append(tok)
+
+
 # ---------------------------------------------------------------------------
 # CREATE TABLE / INSERT parsing
 # ---------------------------------------------------------------------------
@@ -175,68 +207,23 @@ class TableDef:
     columns: list[tuple[str, T.DataType]] = field(default_factory=list)
 
     @property
+    def names(self) -> list[str]:
+        return [c for c, _ in self.columns]
+
+    @property
     def schema(self) -> T.StructType:
         return T.StructType(
             [T.StructField(c, t, True) for c, t in self.columns]
         )
 
 
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` ignoring separators nested in parens/quotes."""
-    parts, depth, cur, state, escape = [], 0, [], None, False
-    for ch in s:
-        if state:
-            cur.append(ch)
-            if escape:
-                escape = False
-            elif ch == "\\" and state in ("'", '"'):
-                escape = True
-            elif ch == state:
-                state = None
-        elif ch in ("'", '"', "`"):
-            state = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
 def parse_create_table(stmt: str) -> TableDef | None:
     m = _CREATE_RE.match(stmt)
     if not m:
         return None
-    body_start = stmt.index("(", m.start()) + 1
-    # match the closing paren of the column list
-    depth, end = 1, None
-    state = None
-    for i in range(body_start, len(stmt)):
-        ch = stmt[i]
-        if state:
-            if ch == state:
-                state = None
-        elif ch in ("'", '"', "`"):
-            state = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                end = i
-                break
-    body = stmt[body_start:end] if end else stmt[body_start:]
     td = TableDef(m.group(1))
-    for coldef in _split_top_level(body):
+    # the column list is the group that opens at the regex's last '('
+    for coldef in next(_groups(stmt[m.end() - 1 :]), []):
         coldef = coldef.strip()
         if not coldef or _CONSTRAINT_PREFIX.match(coldef):
             continue
@@ -254,34 +241,25 @@ _ESCAPES = {
     "b": "\b",
     "Z": "\x1a",
 }
+#: a backslash escape, or a doubled quote of either kind
+_ESCAPE_RE = re.compile(r"\\(.)|(['\"])\2", re.S)
 
 
 def _parse_value(tok: str):
     tok = tok.strip()
     if not tok or tok.upper() == "NULL":
         return None
-    if tok[0] in ("'", '"') and tok[-1] == tok[0] and len(tok) >= 2:
-        # Single left-to-right scan: backslash escapes and doubled-quote
+    q = tok[0]
+    if q in ("'", '"') and tok[-1] == q and len(tok) >= 2:
+        # One left-to-right pass: backslash escapes and doubled-quote
         # escapes are consumed together, so the output of one rule can
         # never be re-consumed by another ('a\'\'b' is a''b, not a'b —
-        # MySQL semantics, where \x for unknown x is x).
-        q = tok[0]
-        inner = tok[1:-1]
-        out: list[str] = []
-        i, n = 0, len(inner)
-        while i < n:
-            ch = inner[i]
-            if ch == "\\" and i + 1 < n:
-                nxt = inner[i + 1]
-                out.append(_ESCAPES.get(nxt, nxt))
-                i += 2
-            elif ch == q and i + 1 < n and inner[i + 1] == q:
-                out.append(q)
-                i += 2
-            else:
-                out.append(ch)
-                i += 1
-        return "".join(out)
+        # MySQL semantics, where \x for unknown x is x). A doubled
+        # quote of the other kind is not an escape and stays as it is.
+        return _ESCAPE_RE.sub(
+            lambda m: _ESCAPES.get(m[1], m[1]) if m[1] else (q if m[2] == q else m[0]),
+            tok[1:-1],
+        )
     return tok  # numeric / literal — cast later against the schema
 
 
@@ -290,60 +268,62 @@ def parse_insert(stmt: str) -> tuple[str, list[str] | None, list[list]] | None:
     m = _INSERT_RE.match(stmt)
     if not m:
         return None
-    table = m.group(1)
     cols = None
     if m.group(2):
         cols = [c.strip().strip('`"') for c in m.group(2)[1:-1].split(",")]
-    values_part = stmt[m.end() :].strip()
-    # tolerate a statement that still carries its terminator
-    if values_part.endswith(";"):
-        values_part = values_part[:-1]
-    rows = []
-    for tup in _split_top_level(values_part):
-        tup = tup.strip()
-        if not (tup.startswith("(") and tup.endswith(")")):
-            continue
-        rows.append([_parse_value(v) for v in _split_top_level(tup[1:-1])])
-    return table, cols, rows
+    rows = [[_parse_value(v) for v in row] for row in _groups(stmt[m.end() :])]
+    return m.group(1), cols, rows
+
+
+def _ddl_rows(columns: list[str], cols: list[str] | None, rows: list[list]) -> list[list]:
+    """An INSERT's ``rows`` in the DDL's column order: an explicit
+    ``INSERT (cols)`` list is reordered (a DDL column it omits is NULL),
+    and every row is padded with NULLs or truncated to the DDL's width."""
+    if cols:
+        order = {c: i for i, c in enumerate(cols)}
+        idx = [order.get(c) for c in columns]
+        return [[r[i] if i is not None and i < len(r) else None for i in idx] for r in rows]
+    width = len(columns)
+    return [r[:width] + [None] * (width - len(r)) for r in rows]
 
 
 # ---------------------------------------------------------------------------
 # Public API
 # ---------------------------------------------------------------------------
 
+#: parsed rows per DataFrame handed to Spark; the driver holds at most
+#: one batch per table
+_BATCH_ROWS = 50_000
+
 
 def parse_dump(
     spark: SparkSession,
     path: str,
     tables: list[str] | None = None,
-    batch_rows: int = 50_000,
 ) -> dict[str, DataFrame]:
     """Parse a .sql dump into typed DataFrames, one per table.
 
     Values are materialized as strings and cast to the DDL's types on
     the executors (a narrow, codegen'd projection) — the driver never
-    does per-value type conversion. ``tables`` filters which tables to
-    load (the reference's table-subset option, sh:332-333)."""
+    does per-value type conversion. A value the type cannot hold
+    (MySQL's '0000-00-00' dates, text in an INT column) becomes NULL,
+    as in the ``sqldump`` DataSource. ``tables`` filters which tables
+    to load (the reference's table-subset option, sh:332-333); a listed
+    table with no CREATE TABLE in the dump is a ``ValueError``."""
     defs: dict[str, TableDef] = {}
     pending: dict[str, list[list]] = {}
-    frames: dict[str, list[DataFrame]] = {}
+    frames: dict[str, DataFrame] = {}
 
     def flush(tname: str) -> None:
-        rows = pending.get(tname)
-        if not rows:
-            return
         td = defs[tname]
         raw_schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c, _ in td.columns]
+            [T.StructField(c, T.StringType(), True) for c in td.names]
         )
-        width = len(td.columns)
-        norm = [r[:width] + [None] * (width - len(r)) for r in rows]
-        raw = spark.createDataFrame(norm, raw_schema)
+        raw = spark.createDataFrame(pending.pop(tname, []), raw_schema)
         typed = raw.select(
-            *[F.col(c).cast(t).alias(c) for c, t in td.columns]
+            *[F.col(c).try_cast(t).alias(c) for c, t in td.columns]
         )
-        frames.setdefault(tname, []).append(typed)
-        pending[tname] = []
+        frames[tname] = frames[tname].unionByName(typed) if tname in frames else typed
 
     for stmt in split_statements(_file_chunks(path)):
         td = parse_create_table(stmt)
@@ -352,66 +332,18 @@ def parse_dump(
                 defs[td.name] = td
             continue
         ins = parse_insert(stmt)
-        if ins is None:
+        if ins is None or ins[0] not in defs:
             continue
         tname, cols, rows = ins
-        if tname not in defs:
-            continue
-        if cols:  # reorder/drop to DDL column order
-            order = {c: i for i, c in enumerate(cols)}
-            full = []
-            for r in rows:
-                full.append(
-                    [
-                        r[order[c]] if c in order and order[c] < len(r) else None
-                        for c, _ in defs[tname].columns
-                    ]
-                )
-            rows = full
         buf = pending.setdefault(tname, [])
-        buf.extend([[None if v is None else str(v) for v in r] for r in rows])
-        if len(buf) >= batch_rows:
+        buf.extend(_ddl_rows(defs[tname].names, cols, rows))
+        if len(buf) >= _BATCH_ROWS:
             flush(tname)
 
-    for tname in list(defs):
-        flush(tname)
-
-    out: dict[str, DataFrame] = {}
-    for tname, td in defs.items():
-        parts = frames.get(tname)
-        if parts:
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            out[tname] = df
-        else:
-            out[tname] = spark.createDataFrame([], td.schema)
-    return out
-
-
-def dump_to_orc(
-    spark: SparkSession,
-    dump_path: str,
-    output_dir: str,
-    compression: str = "snappy",
-    tables: list[str] | None = None,
-    report=None,
-) -> dict[str, str]:
-    """The reference's EP3 end-to-end (sql_dump_to_orc_converter.py,
-    sh:403-415): dump file → typed tables → ORC directory per table.
-    ``report`` narrates per-table progress (progress.py)."""
-    import os
-
-    from ..progress import write_with_progress
-    from ..sinks.orc import write_orc
-
-    written = {}
-    parsed = parse_dump(spark, dump_path, tables)
-    for i, (name, df) in enumerate(parsed.items(), 1):
-        table_dir = os.path.join(output_dir, name)
-        write_with_progress(
-            spark, df, name, i, len(parsed), report,
-            lambda d, out=table_dir: write_orc(d, out, compression=compression),
-        )
-        written[name] = table_dir
-    return written
+    missing = sorted(set(tables or ()) - set(defs))
+    if missing:
+        raise ValueError(f"tables {missing} have no CREATE TABLE in {path}")
+    for tname in defs:  # the last batch; a table with no rows is empty
+        if pending.get(tname) or tname not in frames:
+            flush(tname)
+    return {tname: frames[tname] for tname in defs}

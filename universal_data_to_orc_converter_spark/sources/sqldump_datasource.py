@@ -16,9 +16,11 @@ tell() cookies are not comparable to byte offsets). Multi-line INSERT
 statements are read until their top-level ``;`` closes, and a
 statement-led physical line carrying several top-level statements
 yields ALL of them — an INSERT that begins mid-line after another
-statement (``CREATE TABLE t(...); INSERT INTO t ...``) included —
-using the same quote/escape-aware incremental scanner
-(``StatementSplitter``) as the driver-side parser. Lines that do not
+statement (``CREATE TABLE t(...); INSERT INTO t ...``) included.
+Statements, value tuples and escapes all come from the one MySQL
+lexer in ``sources/sqldump.py`` (``StatementSplitter``,
+``parse_insert``), so this reader and the driver-side parser cannot
+disagree on a quote. Lines that do not
 begin a statement (VALUES continuations, comments) are skipped at
 resync; their owning statement is read to completion by the split
 that owns its first line. The table's schema
@@ -49,6 +51,8 @@ from pyspark.sql.types import StructType
 
 from .sqldump import (
     StatementSplitter,
+    _ddl_rows,
+    _file_chunks,
     parse_create_table,
     parse_insert,
     split_statements,
@@ -67,19 +71,10 @@ class _Range(InputPartition):
 def _scan_header(path: str, table: str):
     """Driver-side pre-scan: the table's CREATE TABLE statement →
     (schema, ddl column order). Metadata-only; stops at the DDL."""
-
-    def chunks():
-        with open(path, encoding="utf-8", errors="replace") as f:
-            while True:
-                c = f.read(1 << 20)
-                if not c:
-                    return
-                yield c
-
-    for stmt in split_statements(chunks()):
+    for stmt in split_statements(_file_chunks(path)):
         td = parse_create_table(stmt)
         if td is not None and td.name == table:
-            return td.schema, [c for c, _ in td.columns]
+            return td.schema, td.names
     raise ValueError(f"table {table!r} has no CREATE TABLE in {path}")
 
 
@@ -133,7 +128,6 @@ class SqlDumpReader(DataSourceReader):
         from decimal import Decimal
 
         types = [f.dataType.simpleString() for f in self.schema.fields]
-        width = len(self.schema.fields)
 
         def convert(raw, t):
             if raw is None:
@@ -164,18 +158,8 @@ class SqlDumpReader(DataSourceReader):
             tname, cols, rows = parsed
             if tname != self.table:
                 return
-            order = {c: i for i, c in enumerate(cols)} if cols else None
-            for r in rows:
-                if order is not None:
-                    r = [
-                        r[order[c]] if c in order and order[c] < len(r) else None
-                        for c in self.columns
-                    ]
-                r = r[:width] + [None] * (width - len(r))
-                yield tuple(
-                    convert(v if v is None else str(v), t)
-                    for v, t in zip(r, types)
-                )
+            for r in _ddl_rows(self.columns, cols, rows):
+                yield tuple(convert(v, t) for v, t in zip(r, types))
 
         with open(self.path, "rb") as f:
             if partition.start > 0:
