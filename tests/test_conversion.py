@@ -7,10 +7,14 @@ sh:192) and the exact string-literal cases its regex parser corrupts
 
 from __future__ import annotations
 
+import datetime
 import glob
 import os
 
+import pyarrow as pa
 import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -228,6 +232,66 @@ def test_convert_sql_dump_missing_table_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="'nope'.*no CREATE TABLE"):
         convert_sql_dump(spark, str(p), str(out), tables=["users", "nope"])
     assert not out.exists()
+
+
+# values that must survive the parser, the string batches handed to
+# Spark, the typed projection and the ORC write unchanged
+ADVERSARIAL_DUMP = r"""
+CREATE TABLE a (id INT, s TEXT, d DATE, n INT);
+INSERT INTO a VALUES
+  (1, 'nul\0mid\Zend', '0000-00-00', 'x'),
+  (2, '😀 four bytes', '2024-01-02', 5),
+  (3, '', NULL, NULL),
+  (4, NULL, '2024-02-30', '7');
+CREATE TABLE empty (id INT, d DATE, x DECIMAL(5,2));
+"""
+
+
+def test_convert_sql_dump_adversarial_values(spark, tmp_path):
+    p = tmp_path / "adv.sql"
+    p.write_text(ADVERSARIAL_DUMP, encoding="utf-8")
+    written = convert_sql_dump(spark, str(p), str(tmp_path / "orc"))
+    a = read_orc(spark, written["a"])
+    assert a.schema.simpleString() == "struct<id:bigint,s:string,d:date,n:bigint>"
+    assert sorted(map(tuple, a.collect())) == [
+        (1, "nul\x00mid\x1aend", None, None),  # zero date, text in INT
+        (2, "😀 four bytes", datetime.date(2024, 1, 2), 5),
+        (3, "", None, None),  # '' stays '', NULL stays NULL
+        (4, None, None, 7),
+    ]
+    # a CREATE TABLE with no INSERT keeps its typed schema, with no rows
+    empty = read_orc(spark, written["empty"])
+    assert empty.schema.simpleString() == "struct<id:bigint,d:date,x:decimal(5,2)>"
+    assert empty.count() == 0
+
+
+def test_convert_sql_dump_unclosed_create_table(spark, tmp_path):
+    """A CREATE TABLE whose column list never closes has no columns;
+    ORC cannot hold a table without columns, and Spark says so."""
+    p = tmp_path / "u.sql"
+    p.write_text("CREATE TABLE u (id INT, s TEXT;\nINSERT INTO u VALUES (1,'a');\n")
+    assert parse_dump(spark, str(p))["u"].schema == T.StructType([])
+    with pytest.raises(AnalysisException, match="EMPTY_SCHEMA_NOT_SUPPORTED"):
+        convert_sql_dump(spark, str(p), str(tmp_path / "orc"))
+
+
+def test_parse_dump_hands_spark_only_arrow_tables(spark, tmp_path, monkeypatch):
+    """Parsed rows cross to the JVM as Arrow tables; a list of Python
+    rows here would bring back per-row verification and pickling."""
+    seen = []
+    create = SparkSession.createDataFrame
+
+    def spy(self, data, *args, **kwargs):
+        seen.append(data)
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", spy)
+    p = tmp_path / "d.sql"
+    p.write_text(DUMP)
+    dfs = parse_dump(spark, str(p))
+    assert set(dfs) == {"users", "tags"}
+    assert len(seen) == 2
+    assert all(isinstance(d, pa.Table) for d in seen), [type(d) for d in seen]
 
 
 def test_mysql_type_mapping():

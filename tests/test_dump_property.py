@@ -10,6 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from universal_data_to_orc_converter_spark.sources.sqldump import (
+    _parse_value,
     parse_create_table,
     parse_insert,
     split_statements,
@@ -52,6 +53,17 @@ def test_string_literals_roundtrip(values):
     assert len(got) == len(values)
     for g, v in zip(got, values):
         assert g == v, (g, v)
+
+
+@given(nasty_text, st.sampled_from("'\""), st.booleans())
+@settings(max_examples=300, deadline=None)
+def test_quoted_literal_decodes_to_its_text(text, quote, doubled):
+    """Any text, rendered as a '…' or "…" literal with its own quote
+    escaped by doubling or by a backslash, decodes to itself — whether
+    or not the body holds an escape at all."""
+    escape = quote + quote if doubled else "\\" + quote
+    body = text.replace("\\", "\\\\").replace(quote, escape)
+    assert _parse_value(quote + body + quote) == text
 
 
 @given(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from universal_data_to_orc_converter_spark.sources import sqldump
 from universal_data_to_orc_converter_spark.sources.sqldump import (
     _parse_value,
     parse_dump,
@@ -173,6 +174,37 @@ def test_malformed_values_are_null_in_both_readers(registered, tmp_path):
     assert rows == sorted(map(tuple, parse_dump(spark, str(p))["z"].collect()))
     assert rows[0] == (1, None, None, None)
     assert rows[1][3] == 7
+
+
+def test_parse_dump_multi_batch_union(registered, tmp_path, monkeypatch):
+    """Batches of two rows — one INSERT split across batches, one
+    batch fed by several INSERTs, an explicit column list — union to
+    the rows of one batch and of the DataSource."""
+    spark = registered
+    p = tmp_path / "batches.sql"
+    p.write_text(
+        "CREATE TABLE t (id INT, s VARCHAR(20), d DATE);\n"
+        "INSERT INTO t VALUES (1, 'a', '2024-01-01'), (2, 'b;c', NULL),"
+        " (3, NULL, '2024-01-03');\n"
+        "INSERT INTO t VALUES (4, 'it''s', '0000-00-00');\n"
+        "INSERT INTO t (d, id) VALUES ('2024-01-05', 5), (NULL, 6);\n"
+        "INSERT INTO t VALUES (7, 'g', '2024-01-07');\n"
+    )
+    one_batch = sorted(map(tuple, parse_dump(spark, str(p))["t"].collect()))
+    monkeypatch.setattr(sqldump, "_BATCH_ROWS", 2)
+    batched = parse_dump(spark, str(p))["t"]
+    assert "Union" in batched._jdf.queryExecution().analyzed().toString()
+    via_ds = (
+        spark.read.format("sqldump")
+        .option("path", str(p))
+        .option("table", "t")
+        .load()
+    )
+    assert batched.schema == via_ds.schema
+    assert sorted(map(tuple, batched.collect())) == one_batch
+    assert sorted(map(tuple, via_ds.collect())) == one_batch
+    assert [r[0] for r in one_batch] == list(range(1, 8))
+    assert one_batch[4][1] is None  # column the explicit list omits
 
 
 def test_parse_value_escape_ordering():

@@ -16,9 +16,12 @@ a typed Spark schema) and the INSERT value tuples are all walks over
 its tokens, and ``_parse_value`` decodes a literal's escapes with one
 ``re.sub``; the distributed reader (``sqldump_datasource.py``) reuses
 the same functions. Statements are split in a streaming pass (bounded
-memory — the reference reads the whole dump twice, sh:325/371);
-parsed rows are batched into DataFrames, so the dump's rows are
-distributed the moment they leave the parser.
+memory — the reference reads the whole dump twice, sh:325/371).
+Parsed rows cross to the JVM in batches, each one ``pyarrow.Table`` of
+string columns, as the reference hands every batch to its writer as
+Arrow (sh:382/389/391): Spark ships the table as Arrow record batches,
+with no per-value type check, pickling or JVM-side unpickling, and the
+dump's rows are distributed the moment they leave the parser.
 
 Scale posture: a .sql dump is an inherently serial, single-machine
 ingest format — the parse is driver-side by design, but memory is
@@ -251,6 +254,9 @@ def _parse_value(tok: str):
         return None
     q = tok[0]
     if q in ("'", '"') and tok[-1] == q and len(tok) >= 2:
+        body = tok[1:-1]
+        if "\\" not in body and q not in body:
+            return body  # no escape can be in it
         # One left-to-right pass: backslash escapes and doubled-quote
         # escapes are consumed together, so the output of one rule can
         # never be re-consumed by another ('a\'\'b' is a''b, not a'b —
@@ -258,7 +264,7 @@ def _parse_value(tok: str):
         # quote of the other kind is not an escape and stays as it is.
         return _ESCAPE_RE.sub(
             lambda m: _ESCAPES.get(m[1], m[1]) if m[1] else (q if m[2] == q else m[0]),
-            tok[1:-1],
+            body,
         )
     return tok  # numeric / literal — cast later against the schema
 
@@ -291,8 +297,8 @@ def _ddl_rows(columns: list[str], cols: list[str] | None, rows: list[list]) -> l
 # Public API
 # ---------------------------------------------------------------------------
 
-#: parsed rows per DataFrame handed to Spark; the driver holds at most
-#: one batch per table
+#: parsed rows per Arrow table handed to Spark; the driver holds at
+#: most one batch per table
 _BATCH_ROWS = 50_000
 
 
@@ -303,23 +309,30 @@ def parse_dump(
 ) -> dict[str, DataFrame]:
     """Parse a .sql dump into typed DataFrames, one per table.
 
-    Values are materialized as strings and cast to the DDL's types on
-    the executors (a narrow, codegen'd projection) — the driver never
-    does per-value type conversion. A value the type cannot hold
-    (MySQL's '0000-00-00' dates, text in an INT column) becomes NULL,
-    as in the ``sqldump`` DataSource. ``tables`` filters which tables
-    to load (the reference's table-subset option, sh:332-333); a listed
-    table with no CREATE TABLE in the dump is a ``ValueError``."""
+    Values are materialized as strings: every ``_BATCH_ROWS`` rows of a
+    table cross to the JVM as one Arrow table of string columns, and
+    are cast to the DDL's types on the executors (a narrow, codegen'd
+    projection) — the driver never does per-value type conversion. A
+    value the type cannot hold (MySQL's '0000-00-00' dates, text in an
+    INT column) becomes NULL, as in the ``sqldump`` DataSource.
+    ``tables`` filters which tables to load (the reference's
+    table-subset option, sh:332-333); a listed table with no CREATE
+    TABLE in the dump is a ``ValueError``."""
+    import pyarrow as pa
+
     defs: dict[str, TableDef] = {}
     pending: dict[str, list[list]] = {}
     frames: dict[str, DataFrame] = {}
 
     def flush(tname: str) -> None:
         td = defs[tname]
-        raw_schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in td.names]
+        rows = pending.pop(tname, [])
+        raw = spark.createDataFrame(
+            pa.table(
+                [pa.array([r[i] for r in rows], pa.string()) for i in range(len(td.names))],
+                names=td.names,
+            )
         )
-        raw = spark.createDataFrame(pending.pop(tname, []), raw_schema)
         typed = raw.select(
             *[F.col(c).try_cast(t).alias(c) for c, t in td.columns]
         )

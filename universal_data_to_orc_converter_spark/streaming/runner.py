@@ -59,7 +59,12 @@ def stream_partitions(spark: SparkSession):
     queries planned concurrently by another driver thread can still
     observe the narrow value — harmless: the registry is
     partition-count invariant, proven by
-    scripts/partition_invariance_audit.py.)"""
+    scripts/partition_invariance_audit.py.)
+
+    Wrap only the ``.start()`` call: the lock is held for the whole
+    block, so anything else inside it (waiting on the query, reading
+    its results) serializes every other stream start behind it, and a
+    batch query planned inside it runs at the narrow value."""
     global _STREAM_PART_DEPTH
     key = "spark.sql.shuffle.partitions"
     with _STREAM_PART_LOCK:
