@@ -5,8 +5,9 @@ caveats), so every skew claim in the repo (the three window→join
 hardenings in the text ops, SON heavy hitters, the skew-profile
 diagnostic) has so far been validated against *derived* keys and
 reasoning alone. This generator produces a fixture with REAL skew so
-those plans can be measured (scripts/bench_skew.py; PERF.md "skewed
-fixture experiment"):
+those plans can be measured (point ``SPARK_GRAFT_SF_DIR`` at it and run
+``bench.py`` or a registry op; PERF.md "skewed fixture experiment"
+records the original results):
 
 * ``documents``: sf0.1's 5k docs replicated 20× (word-shuffled per
   replica like make_sf1.py, so replicas aren't near-dups) = 100k docs;

@@ -125,63 +125,57 @@ def test_wizard_dump_flow_inprocess(spark, tmp_path):
     assert "a: 1 rows written (1/1 tables)" in lines, lines
 
 
-def test_write_with_progress_silent_without_report(spark, tmp_path):
-    """report=None must leave the write hook-free: no observe node in
-    the plan, no narration — byte-identical to a plain write."""
-    from universal_data_to_orc_converter_spark.progress import (
-        write_with_progress,
+def test_convert_progress_silent_without_report(spark, tmp_path, monkeypatch):
+    """report=None must write the frame unobserved: no CollectMetrics
+    node in the plan the ORC write gets (report on adds one)."""
+    from universal_data_to_orc_converter_spark import converter
+
+    src = tmp_path / "t.csv"
+    src.write_text("id\n1\n2\n")
+    plans = []
+    real_write = converter.write_orc
+
+    def spy(df, path, **kw):
+        plans.append(df._jdf.queryExecution().analyzed().toString())
+        real_write(df, path, **kw)
+
+    monkeypatch.setattr(converter, "write_orc", spy)
+    converter.convert_csv(spark, str(src), str(tmp_path / "silent"))
+    converter.convert_csv(
+        spark, str(src), str(tmp_path / "narrated"), report=lambda s: None
     )
-
-    df = spark.range(10)
-    seen = []
-    write_with_progress(
-        spark, df, "t", 1, 1, None,
-        lambda d: seen.append(d.schema.jsonValue() if False else d),
-    )
-    assert seen[0] is df  # untouched frame — no observe() wrapper
+    assert "CollectMetrics" not in plans[0], plans[0]
+    assert "CollectMetrics" in plans[1], plans[1]
 
 
-def test_write_with_progress_reports_rows(spark, tmp_path):
-    from universal_data_to_orc_converter_spark.progress import (
-        write_with_progress,
-    )
+def test_convert_progress_reports_rows(spark, tmp_path):
+    from universal_data_to_orc_converter_spark.converter import convert_csv
 
-    out = str(tmp_path / "rows_orc")
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.csv").write_text("id\n1\n")
+    (src / "b.csv").write_text("id\n" + "".join(f"{i}\n" for i in range(1234)))
+    (src / "c.csv").write_text("id\n1\n2\n")
     lines = []
-    write_with_progress(
-        spark,
-        spark.range(1234),
-        "users",
-        2,
-        3,
-        lines.append,
-        lambda d: d.write.mode("overwrite").orc(out),
-    )
-    assert lines[0] == "Converting users (2/3) ..."
-    assert lines[-1] == "users: 1,234 rows written (2/3 tables)"
+    convert_csv(spark, str(src), str(tmp_path / "out"), report=lines.append)
+    assert "Converting b (2/3) ..." in lines, lines
+    assert "b: 1,234 rows written (2/3 tables)" in lines, lines
+    assert lines[-1] == "c: 2 rows written (3/3 tables)", lines
 
 
-def test_write_with_progress_restores_caller_job_group(spark, tmp_path):
+def test_convert_progress_restores_caller_job_group(spark, tmp_path):
     """A caller that wraps multi-table conversions in its OWN job group
-    must get it back after each table — the pre-r13 finally clause
-    cleared the thread's group unconditionally (r12 advice)."""
-    from universal_data_to_orc_converter_spark.progress import (
-        write_with_progress,
-    )
+    must get it back after each table — an unconditional clear would
+    wipe it after the first table."""
+    from universal_data_to_orc_converter_spark.converter import convert_csv
 
+    src = tmp_path / "t.csv"
+    src.write_text("id\n1\n")
     sc = spark.sparkContext
     sc.setJobGroup("caller_batch", "caller's own group")
     try:
-        write_with_progress(
-            spark,
-            spark.range(5),
-            "t",
-            1,
-            1,
-            lambda s: None,
-            lambda d: d.write.mode("overwrite").orc(
-                str(tmp_path / "jg_orc")
-            ),
+        convert_csv(
+            spark, str(src), str(tmp_path / "jg"), report=lambda s: None
         )
         assert sc.getLocalProperty("spark.jobGroup.id") == "caller_batch"
         assert (
@@ -190,82 +184,40 @@ def test_write_with_progress_restores_caller_job_group(spark, tmp_path):
         )
     finally:
         sc.setJobGroup(None, None)
-    # and with no caller group, the hook still leaves the thread clean
-    write_with_progress(
-        spark,
-        spark.range(5),
-        "t2",
-        1,
-        1,
-        lambda s: None,
-        lambda d: d.write.mode("overwrite").orc(str(tmp_path / "jg2_orc")),
-    )
+    # and with no caller group, the loop still leaves the thread clean
+    convert_csv(spark, str(src), str(tmp_path / "jg2"), report=lambda s: None)
     assert sc.getLocalProperty("spark.jobGroup.id") is None
 
 
-def test_write_with_progress_rejects_actionless_write(spark, monkeypatch):
-    """A write callback that never runs an action would block forever
-    on Observation.get; the hook must raise instead (r12 advice)."""
-    import pytest
+def test_convert_progress_empty_table_reports_zero_rows(spark, tmp_path):
+    """A dump table with a CREATE TABLE and no INSERT is an empty frame;
+    its observed row total must still resolve (0) and the conversion
+    return. Run in a daemon thread so a hang fails instead of stalling
+    the suite."""
+    import threading
 
-    from universal_data_to_orc_converter_spark import progress
-    from universal_data_to_orc_converter_spark.progress import (
-        write_with_progress,
+    from universal_data_to_orc_converter_spark.converter import (
+        convert_sql_dump,
     )
 
-    monkeypatch.setattr(progress, "_OBS_TIMEOUT_SEC", 2.0)
-    with pytest.raises(ValueError, match="no Spark action"):
-        write_with_progress(
-            spark, spark.range(5), "noop", 1, 1, lambda s: None,
-            lambda d: None,
+    dump = tmp_path / "d.sql"
+    dump.write_text(
+        "CREATE TABLE d (x INT); INSERT INTO d VALUES (1);"
+        "CREATE TABLE e (y INT);"
+    )
+    lines, result = [], {}
+
+    def run():
+        result["tables"] = convert_sql_dump(
+            spark, str(dump), str(tmp_path / "out"), report=lines.append
         )
 
-
-def test_write_with_progress_rejects_unrelated_frame_action(
-    spark, monkeypatch
-):
-    """A callback that runs an action on some OTHER frame — never
-    materializing the observed plan — slipped past the old job-group
-    guard and then hung on Observation.get (r13 advice); the
-    Observation-poll guard must raise."""
-    import pytest
-
-    from universal_data_to_orc_converter_spark import progress
-    from universal_data_to_orc_converter_spark.progress import (
-        write_with_progress,
-    )
-
-    monkeypatch.setattr(progress, "_OBS_TIMEOUT_SEC", 2.0)
-    with pytest.raises(ValueError, match="no Spark action"):
-        write_with_progress(
-            spark, spark.range(5), "wrongframe", 1, 1, lambda s: None,
-            lambda d: spark.range(3).count(),  # ignores d entirely
-        )
-
-
-def test_write_with_progress_allows_callback_own_job_group(
-    spark, tmp_path
-):
-    """A callback that sets its OWN job group internally lands its
-    jobs outside the hook's group — the old guard then raised a
-    spurious ValueError AFTER the data was written (r13 advice). The
-    Observation-poll guard must succeed and report the exact count."""
-    from universal_data_to_orc_converter_spark.progress import (
-        write_with_progress,
-    )
-
-    out = str(tmp_path / "own_group_orc")
-    lines = []
-
-    def write_in_own_group(d):
-        spark.sparkContext.setJobGroup("cb_private", "callback group")
-        d.write.mode("overwrite").orc(out)
-
-    write_with_progress(
-        spark, spark.range(77), "owng", 1, 1, lines.append,
-        write_in_own_group,
-    )
-    assert lines[-1] == "owng: 77 rows written (1/1 tables)"
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(180)
+    assert not t.is_alive(), f"conversion did not return: {lines}"
+    assert set(result["tables"]) == {"d", "e"}
+    assert "e: 0 rows written (2/2 tables)" in lines, lines
 
 
 def test_wizard_missing_dump_errors(spark, tmp_path):

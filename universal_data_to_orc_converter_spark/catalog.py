@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 #: Metadata-only schema cache, keyed by (path, mtime). ``read.parquet``
@@ -75,32 +76,38 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def events_ts(df: DataFrame) -> DataFrame:
+    """Surface ``events.ts`` as TIMESTAMP (ltz), whatever physical type
+    the fixture generation shipped — the one rule every events reader
+    (batch ``load`` and the streaming readers) applies.
+
+    ``events.ts`` has shipped as TIMESTAMP(NANOS), which Spark surfaces
+    as bigint under ``nanosAsLong``, and as plain timestamp[us]. We
+    therefore probe the observed dtype and convert ns→µs only when the
+    column arrives as bigint — never assume the unit. Truncating
+    integer division matches DuckDB's ns→µs behavior, so oracle
+    comparisons line up either way. ``timestamp_ntz`` is cast to
+    TIMESTAMP so batch and stream paths agree on dtype (watermarks
+    require ltz — EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE otherwise); the
+    session timezone is pinned to UTC, so the cast is value-preserving.
+    ``withColumn`` works on batch and streaming frames alike."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. Lazy: nothing is read until an action.
-
-    ``events.ts`` has shipped in two physical parquet flavors across
-    fixture generations: TIMESTAMP(NANOS) (which Spark surfaces as
-    bigint under ``nanosAsLong``) and plain timestamp[us] (read as
-    TimestampType directly). We therefore probe the observed dtype and
-    convert ns→µs only when the column arrives as bigint — never
-    assume the unit. Truncating integer division matches DuckDB's
-    ns→µs behavior, so oracle comparisons line up either way."""
+    ``events`` is read under ``nanosAsLong`` and its ``ts`` normalized
+    by ``events_ts``."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        from pyspark.sql import functions as F
-
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, table_path(sf_dir, name))
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif ts_type == "timestamp_ntz":
-            # Normalize to TIMESTAMP (ltz) so batch and stream paths
-            # agree on dtype (watermarks require ltz); session tz is
-            # pinned to UTC, so the cast is value-preserving.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return events_ts(_read_parquet(spark, table_path(sf_dir, name)))
     return _read_parquet(spark, table_path(sf_dir, name))
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import events_ts, load
 from ..plans.hints import hint_broadcast
 from ..exprs import dsum, sql_dsum, sql_wide_to_double
 from ..registry import query
@@ -651,18 +651,11 @@ def _stream_interval_join_heartbeat(
     if not pa.types.is_timestamp(ts_field.type):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch_schema = spark.read.parquet(real).schema
-    stream = (
+    stream = events_ts(
         spark.readStream.schema(batch_schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-        )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
     def side(typ: str, prefix: str) -> DataFrame:
         return (

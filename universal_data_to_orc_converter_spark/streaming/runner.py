@@ -21,6 +21,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import events_ts
 from ..scratch import session_scratch
 
 #: Shuffle/state-store partition count captured by a streaming query at
@@ -90,31 +91,20 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     have shipped ``ts`` both as TIMESTAMP(NANOS) (surfaced as bigint
     under nanosAsLong) and as timestamp[us] (surfaced as timestamp
     directly), and a hard-coded ``ts long`` + ``DIV 1000`` silently
-    collapses µs-typed data to ~1970. Convert only when the probed type
-    is bigint — identical to catalog.load's guard."""
+    collapses µs-typed data to ~1970. ``ts`` goes through the same
+    ``catalog.events_ts`` rule as the batch loader."""
     import os
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch_schema = spark.read.parquet(
         os.path.join(sf_dir, "events.parquet")
     ).schema
-    stream = (
+    return events_ts(
         spark.readStream.schema(batch_schema)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-        )
-    elif ts_type == "timestamp_ntz":
-        # Watermarks require TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE
-        # otherwise); with the session timezone pinned to UTC this cast is
-        # value-preserving.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
 
 
 def run_available_now(

@@ -12,11 +12,13 @@ Differences, both deliberate:
 * the MySQL password is read with ``getpass`` (the reference's
   ``read -s``) and never echoed or placed in argv (sh:537 passes it on
   the command line);
-* "Parallel workers" maps to the JDBC read's ``num_partitions`` on
-  the MySQL path (range-partitioned tables read with that many
-  concurrent queries); the dump/CSV paths have no worker knob —
-  Spark schedules their file splits itself, so the answer is
-  accepted for parity and unused there.
+* "Parallel workers" is accepted for parity with the reference and,
+  as things stand, changes no read. On the MySQL path it is passed as
+  ``convert_mysql``'s ``num_partitions``, but that only splits tables
+  named in ``partition_columns`` into key ranges, and the wizard asks
+  for no partition column — so it takes effect only through the
+  library API with a partition column. The dump/CSV paths have no
+  worker knob: Spark schedules their file splits itself.
 
 Testable by construction: prompts go through ``ask``/``say``
 callables, so tests drive the full flow expect-style with string
