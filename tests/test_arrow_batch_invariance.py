@@ -160,8 +160,9 @@ def test_sweep_covers_every_arrow_call_site():
 #: ops whose kernels hold PER-PARTITION state (sketches, local top-k,
 #: samplers, partition-local ranks) — the ones where a result that
 #: moves with spark.sql.shuffle.partitions is most conceivable. The
-#: full registry was swept clean once (258/258 invariant,
-#: scripts/partition_invariance_audit.py, PERF.md r11-restart); this
+#: full registry was swept clean once (258/258 invariant, PERF.md
+#: r11-restart; rerun: scripts/conf_invariance_audit.py
+#: spark.sql.shuffle.partitions 5); this
 #: standing subset keeps the riskiest class pinned in the suite.
 PARTITION_STATE_OPS = [
     "op_heavy_hitters",

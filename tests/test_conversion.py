@@ -10,6 +10,7 @@ from __future__ import annotations
 import datetime
 import glob
 import os
+from decimal import Decimal
 
 import pyarrow as pa
 import pytest
@@ -275,6 +276,50 @@ def test_convert_sql_dump_unclosed_create_table(spark, tmp_path):
         convert_sql_dump(spark, str(p), str(tmp_path / "orc"))
 
 
+# MySQL numeric types wider than the type a naive mapping picks
+WIDE_NUMERIC_DUMP = """
+CREATE TABLE w (
+  u BIGINT(20) UNSIGNED NOT NULL,
+  s SERIAL,
+  big DECIMAL(40,2),
+  huge DECIMAL(65,30),
+  bare DECIMAL,
+  num NUMERIC
+);
+INSERT INTO w VALUES
+  (18446744073709551615, 18446744073709551615,
+   '12345678901234567890123456789012345678.25',
+   '1.000000000000000000000000000001', 12.7, '-3');
+"""
+
+
+def test_convert_sql_dump_wide_numeric_types(spark, tmp_path):
+    """BIGINT UNSIGNED and SERIAL hold 2^64-1 as DECIMAL(20,0) (a LONG
+    made it NULL); a DECIMAL wider than Spark's 38 digits stays its
+    exact text (it failed the whole conversion with
+    DECIMAL_PRECISION_EXCEEDS_MAX_PRECISION); bare DECIMAL and NUMERIC
+    are MySQL's DECIMAL(10,0), not strings."""
+    p = tmp_path / "wide.sql"
+    p.write_text(WIDE_NUMERIC_DUMP)
+    written = convert_sql_dump(spark, str(p), str(tmp_path / "orc"))
+    w = read_orc(spark, written["w"])
+    assert w.schema.simpleString() == (
+        "struct<u:decimal(20,0),s:decimal(20,0),big:string,huge:string,"
+        "bare:decimal(10,0),num:decimal(10,0)>"
+    )
+    top = 2**64 - 1
+    assert [tuple(r) for r in w.collect()] == [
+        (
+            Decimal(top),
+            Decimal(top),
+            "12345678901234567890123456789012345678.25",
+            "1.000000000000000000000000000001",
+            Decimal(13),  # MySQL rounds 12.7 into DECIMAL(10,0) too
+            Decimal(-3),
+        )
+    ]
+
+
 def test_parse_dump_hands_spark_only_arrow_tables(spark, tmp_path, monkeypatch):
     """Parsed rows cross to the JVM as Arrow tables; a list of Python
     rows here would bring back per-row verification and pickling."""
@@ -307,6 +352,15 @@ def test_mysql_type_mapping():
 # ORC sink: codec matrix + chunking (sh:168-169, sh:192)
 # ---------------------------------------------------------------------------
 
+
+
+def test_mysql_type_mapping_reads_unsigned_only_as_an_attribute():
+    assert mysql_type_to_spark("bigint unsigned zerofill") == T.DecimalType(20, 0)
+    assert mysql_type_to_spark("BIGINT SIGNED") == T.LongType()
+    assert mysql_type_to_spark("int(10) unsigned") == T.LongType()  # fits
+    # the word in a COMMENT is not the attribute
+    assert mysql_type_to_spark("BIGINT NOT NULL COMMENT 'unsigned'") == T.LongType()
+    assert mysql_type_to_spark("numeric(38, 4)") == T.DecimalType(38, 4)
 
 @pytest.mark.parametrize("codec", ["snappy", "zlib", "none", "lzo", "lz4", "zstd"])
 def test_orc_codec_roundtrip(spark, tmp_path, codec):

@@ -13,6 +13,7 @@ from universal_data_to_orc_converter_spark.sources.sqldump import (
 )
 from universal_data_to_orc_converter_spark.sources.sqldump_datasource import (
     SqlDumpDataSource,
+    read_table,
 )
 
 
@@ -47,12 +48,7 @@ def make_dump(path, n_rows=500, rows_per_stmt=7):
 def test_datasource_matches_driver_parser(registered, tmp_path):
     spark = registered
     p = make_dump(tmp_path / "d.sql")
-    via_ds = (
-        spark.read.format("sqldump")
-        .option("path", str(p))
-        .option("table", "items")
-        .load()
-    )
+    via_ds = read_table(spark, str(p), "items")
     via_driver = parse_dump(spark, str(p))["items"]
     assert via_ds.schema == via_driver.schema
     a = sorted(map(tuple, via_ds.collect()))
@@ -67,13 +63,7 @@ def test_datasource_split_boundaries(registered, tmp_path, split_bytes):
     boundaries fall — including splits smaller than one statement."""
     spark = registered
     p = make_dump(tmp_path / "d.sql", n_rows=120, rows_per_stmt=5)
-    df = (
-        spark.read.format("sqldump")
-        .option("path", str(p))
-        .option("table", "items")
-        .option("split_bytes", str(split_bytes))
-        .load()
-    )
+    df = read_table(spark, str(p), "items", split_bytes=split_bytes)
     ids = sorted(r["id"] for r in df.collect())
     assert ids == list(range(120)), (
         f"split_bytes={split_bytes}: got {len(ids)} rows"
@@ -100,13 +90,7 @@ def test_datasource_midline_insert_after_statement(
         "INSERT INTO items VALUES (3, 'three');\n"
         "DROP TABLE IF EXISTS junk; INSERT INTO items VALUES (4, 'four');\n"
     )
-    df = (
-        spark.read.format("sqldump")
-        .option("path", str(p))
-        .option("table", "items")
-        .option("split_bytes", str(split_bytes))
-        .load()
-    )
+    df = read_table(spark, str(p), "items", split_bytes=split_bytes)
     rows = sorted(map(tuple, df.collect()))
     assert rows == [(1, "one; tricky"), (2, "two"), (3, "three"), (4, "four")]
     via_driver = sorted(
@@ -143,12 +127,7 @@ def test_datasource_multiple_statements_per_line(spark, tmp_path):
         "'e');\n"
         "INSERT INTO t VALUES (5, 'plain');\n"
     )
-    df = (
-        spark.read.format("sqldump")
-        .option("path", str(p))
-        .option("table", "t")
-        .load()
-    )
+    df = read_table(spark, str(p), "t")
     got = sorted((r["id"], r["s"]) for r in df.collect())
     assert got == [(1, "a;b"), (2, "c"), (3, "d"), (4, "e"), (5, "plain")]
 
@@ -156,24 +135,91 @@ def test_datasource_multiple_statements_per_line(spark, tmp_path):
 def test_malformed_values_are_null_in_both_readers(registered, tmp_path):
     """MySQL's zero dates and text in an INT column are NULL from both
     readers; under ANSI casts the driver-side parser used to fail the
-    whole conversion with CAST_INVALID_INPUT."""
+    whole conversion with CAST_INVALID_INPUT. Both readers type every
+    literal by the one ``try_cast`` rule: a Python converter in the
+    DataSource used to truncate '1.5' and 2.7 to 1 and 2, read 'yes' as
+    false, round DECIMAL '1.005' down, parse '20240102' as a date, and
+    fail the whole read on 9223372036854775808 and on '99999' in a
+    DECIMAL(5,2)."""
     spark = registered
     p = tmp_path / "zero.sql"
     p.write_text(
         "CREATE TABLE z (id INT, d DATE, ts DATETIME, n INT);\n"
         "INSERT INTO z VALUES (1, '0000-00-00', '0000-00-00 00:00:00', 'x'),"
         "(2, '2024-01-02', '2024-01-02 03:04:05', 7);\n"
+        "CREATE TABLE lit (id INT, n BIGINT, b BOOLEAN, x DECIMAL(5,2),"
+        " d DATE, ts DATETIME);\n"
+        "INSERT INTO lit VALUES (1, '1.5', 'yes', '1.005', '20240102',"
+        " '2024-1-2 3:4:5'), (2, 2.7, '2', '99999', '2024-1-2', NULL),"
+        " (3, 9223372036854775808, NULL, NULL, NULL, NULL);\n"
     )
-    via_ds = (
-        spark.read.format("sqldump")
-        .option("path", str(p))
-        .option("table", "z")
-        .load()
-    )
+    via_ds = read_table(spark, str(p), "z")
     rows = sorted(map(tuple, via_ds.collect()))
     assert rows == sorted(map(tuple, parse_dump(spark, str(p))["z"].collect()))
     assert rows[0] == (1, None, None, None)
     assert rows[1][3] == 7
+    via_ds = read_table(spark, str(p), "lit")
+    via_driver = parse_dump(spark, str(p))["lit"]
+    assert via_ds.schema == via_driver.schema
+    rows = sorted(map(tuple, via_ds.collect()))
+    assert rows == sorted(map(tuple, via_driver.collect()))
+    assert [r[1] for r in rows] == [None, None, None]  # no BIGINT truncation
+    assert rows[0][2] is True and rows[1][2] is None
+    assert str(rows[0][3]) == "1.01" and rows[1][3] is None
+
+
+def test_raw_format_reads_strings_in_ddl_order(registered, tmp_path):
+    """Without a schema, format("sqldump") is a raw reader, like
+    spark.read.csv: every column STRING, in the DDL's order, values as
+    written (an explicit INSERT column list is reordered)."""
+    spark = registered
+    p = tmp_path / "raw.sql"
+    p.write_text(
+        "CREATE TABLE t (id INT, price DECIMAL(8,2), s VARCHAR(9), d DATE);\n"
+        "INSERT INTO t VALUES (1, 2.50, 'a', '0000-00-00');\n"
+        "INSERT INTO t (d, id) VALUES ('2024-01-05', 2);\n"
+    )
+    raw = (
+        spark.read.format("sqldump")
+        .option("path", str(p))
+        .option("table", "t")
+        .load()
+    )
+    assert raw.schema.simpleString() == (
+        "struct<id:string,price:string,s:string,d:string>"
+    )
+    assert sorted(map(tuple, raw.collect())) == [
+        ("1", "2.50", "a", "0000-00-00"),
+        ("2", None, None, "2024-01-05"),
+    ]
+
+
+def test_raw_format_rejects_a_typed_schema(registered, tmp_path):
+    """A caller-supplied schema with a non-string field is an error that
+    names read_table, not a silent cast by another rule."""
+    spark = registered
+    p = tmp_path / "typed.sql"
+    p.write_text("CREATE TABLE t (id INT);\nINSERT INTO t VALUES (1);\n")
+    with pytest.raises(Exception, match="read_table"):
+        (
+            spark.read.format("sqldump")
+            .schema("id BIGINT")
+            .option("path", str(p))
+            .option("table", "t")
+            .load()
+            .collect()
+        )
+
+
+def test_datasource_batches_many_rows(registered, tmp_path):
+    """A split with more rows than one Arrow batch holds yields them
+    all, once each."""
+    spark = registered
+    n = sqldump._BATCH_ROWS + 3
+    p = make_dump(tmp_path / "big.sql", n_rows=n, rows_per_stmt=1000)
+    df = read_table(spark, str(p), "items", split_bytes=1 << 30)
+    got = df.agg({"id": "count"}).first()[0], df.distinct().count()
+    assert got == (n, n)
 
 
 def test_parse_dump_multi_batch_union(registered, tmp_path, monkeypatch):
@@ -194,12 +240,7 @@ def test_parse_dump_multi_batch_union(registered, tmp_path, monkeypatch):
     monkeypatch.setattr(sqldump, "_BATCH_ROWS", 2)
     batched = parse_dump(spark, str(p))["t"]
     assert "Union" in batched._jdf.queryExecution().analyzed().toString()
-    via_ds = (
-        spark.read.format("sqldump")
-        .option("path", str(p))
-        .option("table", "t")
-        .load()
-    )
+    via_ds = read_table(spark, str(p), "t")
     assert batched.schema == via_ds.schema
     assert sorted(map(tuple, batched.collect())) == one_batch
     assert sorted(map(tuple, via_ds.collect())) == one_batch

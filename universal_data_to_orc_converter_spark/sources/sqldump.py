@@ -14,14 +14,14 @@ doubled-quote escapes, `backtick` identifiers, ``--`` and ``/* */``
 comments. Statement splitting, the CREATE TABLE column list (read as
 a typed Spark schema) and the INSERT value tuples are all walks over
 its tokens, and ``_parse_value`` decodes a literal's escapes with one
-``re.sub``; the distributed reader (``sqldump_datasource.py``) reuses
-the same functions. Statements are split in a streaming pass (bounded
-memory — the reference reads the whole dump twice, sh:325/371).
-Parsed rows cross to the JVM in batches, each one ``pyarrow.Table`` of
-string columns, as the reference hands every batch to its writer as
-Arrow (sh:382/389/391): Spark ships the table as Arrow record batches,
-with no per-value type check, pickling or JVM-side unpickling, and the
-dump's rows are distributed the moment they leave the parser.
+``re.sub``. Statements are split in a streaming pass (bounded memory —
+the reference reads the whole dump twice, sh:325/371). For both
+readers this module also owns the two steps after parsing: ``strings``
+builds the Arrow batch of string columns in which rows cross to the
+JVM (as the reference hands its writer Arrow, sh:382/389/391: no
+per-value type check or pickling), and ``typed`` is the one cast rule
+from those strings to the DDL's types. The distributed reader
+(``sqldump_datasource.py``) reuses the lexer and both steps.
 
 Scale posture: a .sql dump is an inherently serial, single-machine
 ingest format — the parse is driver-side by design, but memory is
@@ -45,15 +45,26 @@ from pyspark.sql import types as T
 # DECIMAL→DECIMAL, DATE→DATE, DATETIME→TIMESTAMP)
 # ---------------------------------------------------------------------------
 
-_DECIMAL_RE = re.compile(r"(?:DECIMAL|NUMERIC)\s*\(\s*(\d+)\s*(?:,\s*(\d+))?\s*\)", re.I)
+#: the type name, its ``(M)`` / ``(M,D)`` arguments and the numeric
+#: attributes that follow them
+_TYPE_RE = re.compile(
+    r"(\w+)(?:\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?((?:\s+(?:UNSIGNED|SIGNED|ZEROFILL)\b)*)"
+)
+_MAX_PRECISION = 38  # Spark's largest decimal precision
 
 
 def mysql_type_to_spark(type_sql: str) -> T.DataType:
-    t = type_sql.strip().upper()
-    m = _DECIMAL_RE.match(t)
-    if m:
-        return T.DecimalType(int(m.group(1)), int(m.group(2) or 0))
-    base = re.split(r"[(\s]", t, 1)[0]
+    m = _TYPE_RE.match(type_sql.strip().upper())
+    base, precision, scale, attrs = m.groups() if m else ("", None, None, "")
+    if base in ("DECIMAL", "NUMERIC"):
+        # MySQL's bare DECIMAL is DECIMAL(10,0); a precision Spark cannot
+        # hold stays the exact text
+        p = int(precision or 10)
+        return T.DecimalType(p, int(scale or 0)) if p <= _MAX_PRECISION else T.StringType()
+    # SERIAL is BIGINT UNSIGNED, and ZEROFILL implies UNSIGNED: values
+    # up to 2^64-1 overflow a LONG
+    if base == "SERIAL" or (base == "BIGINT" and ("UNSIGNED" in attrs or "ZEROFILL" in attrs)):
+        return T.DecimalType(20, 0)
     if base in ("TINYINT", "SMALLINT", "MEDIUMINT", "INT", "INTEGER", "BIGINT"):
         return T.LongType()
     if base in ("FLOAT", "DOUBLE", "REAL"):
@@ -213,12 +224,6 @@ class TableDef:
     def names(self) -> list[str]:
         return [c for c, _ in self.columns]
 
-    @property
-    def schema(self) -> T.StructType:
-        return T.StructType(
-            [T.StructField(c, t, True) for c, t in self.columns]
-        )
-
 
 def parse_create_table(stmt: str) -> TableDef | None:
     m = _CREATE_RE.match(stmt)
@@ -297,9 +302,28 @@ def _ddl_rows(columns: list[str], cols: list[str] | None, rows: list[list]) -> l
 # Public API
 # ---------------------------------------------------------------------------
 
-#: parsed rows per Arrow table handed to Spark; the driver holds at
-#: most one batch per table
+#: parsed rows per Arrow batch handed to Spark; the driver (or a
+#: DataSource split) holds at most one batch per table
 _BATCH_ROWS = 50_000
+
+
+def strings(names: list[str], rows: list[list]):
+    """``rows`` (in ``names`` order, values ``str`` or None) as a
+    ``pyarrow.Table`` of string columns, one record batch — the only
+    form in which parsed dump values cross to the JVM."""
+    import pyarrow as pa
+
+    return pa.table(
+        [pa.array([r[i] for r in rows], pa.string()) for i in range(len(names))],
+        names=names,
+    )
+
+
+def typed(raw: DataFrame, td: TableDef) -> DataFrame:
+    """The one cast rule for dump values: ``raw``'s string columns cast to
+    the DDL's types on the executors. A value the type cannot hold (a
+    zero date, text or an overflowing number in an INT) becomes NULL."""
+    return raw.select(*[F.col(c).try_cast(t).alias(c) for c, t in td.columns])
 
 
 def parse_dump(
@@ -310,33 +334,21 @@ def parse_dump(
     """Parse a .sql dump into typed DataFrames, one per table.
 
     Values are materialized as strings: every ``_BATCH_ROWS`` rows of a
-    table cross to the JVM as one Arrow table of string columns, and
-    are cast to the DDL's types on the executors (a narrow, codegen'd
-    projection) — the driver never does per-value type conversion. A
-    value the type cannot hold (MySQL's '0000-00-00' dates, text in an
-    INT column) becomes NULL, as in the ``sqldump`` DataSource.
+    table cross to the JVM as one ``strings`` batch, and ``typed`` casts
+    them to the DDL's types on the executors (a narrow, codegen'd
+    projection) — the driver never does per-value type conversion, and
+    ``sqldump_datasource.read_table`` types its rows by the same rule.
     ``tables`` filters which tables to load (the reference's
     table-subset option, sh:332-333); a listed table with no CREATE
     TABLE in the dump is a ``ValueError``."""
-    import pyarrow as pa
-
     defs: dict[str, TableDef] = {}
     pending: dict[str, list[list]] = {}
     frames: dict[str, DataFrame] = {}
 
     def flush(tname: str) -> None:
         td = defs[tname]
-        rows = pending.pop(tname, [])
-        raw = spark.createDataFrame(
-            pa.table(
-                [pa.array([r[i] for r in rows], pa.string()) for i in range(len(td.names))],
-                names=td.names,
-            )
-        )
-        typed = raw.select(
-            *[F.col(c).try_cast(t).alias(c) for c, t in td.columns]
-        )
-        frames[tname] = frames[tname].unionByName(typed) if tname in frames else typed
+        df = typed(spark.createDataFrame(strings(td.names, pending.pop(tname, []))), td)
+        frames[tname] = frames[tname].unionByName(df) if tname in frames else df
 
     for stmt in split_statements(_file_chunks(path)):
         td = parse_create_table(stmt)

@@ -17,14 +17,17 @@ statements are read until their top-level ``;`` closes, and a
 statement-led physical line carrying several top-level statements
 yields ALL of them — an INSERT that begins mid-line after another
 statement (``CREATE TABLE t(...); INSERT INTO t ...``) included.
-Statements, value tuples and escapes all come from the one MySQL
-lexer in ``sources/sqldump.py`` (``StatementSplitter``,
-``parse_insert``), so this reader and the driver-side parser cannot
-disagree on a quote. Lines that do not
-begin a statement (VALUES continuations, comments) are skipped at
-resync; their owning statement is read to completion by the split
-that owns its first line. The table's schema
-comes from a driver-side metadata pre-scan of the CREATE TABLE header.
+Lines that do not begin a statement (VALUES continuations, comments)
+are skipped at resync; their owning statement is read to completion
+by the split that owns its first line.
+
+Like ``spark.read.csv`` without a schema, the format is a raw reader:
+every column is STRING, in the DDL's order, taken from a driver-side
+scan of the table's CREATE TABLE header. Each split yields its rows
+as ``sqldump.strings`` Arrow batches, and ``read_table`` types them
+with ``sqldump.typed`` — the lexer, the Arrow hand-off and the cast
+rule are all the driver-side parser's, so the two readers cannot
+disagree on a quote or on a value.
 
 Known limitation (inherent to offset-based resync): a RAW newline
 inside a string literal whose next line happens to start with
@@ -35,47 +38,67 @@ in-literal newlines, use the serial driver-side parser
 (``sources/sqldump.py``), which scans from offset 0 with full state.
 
 Usage:
-    spark.dataSource.register(SqlDumpDataSource)
-    df = (spark.read.format("sqldump")
-          .option("path", "/data/dump.sql")
-          .option("table", "users")
-          .load())
+    users = read_table(spark, "/data/dump.sql", "users")   # DDL types
+
+    register(spark)                                # the raw reader
+    raw = (spark.read.format("sqldump")            # STRING columns,
+           .option("path", "/data/dump.sql")       # DDL order
+           .option("table", "users")
+           .load())
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .sqldump import (
+    _BATCH_ROWS,
     StatementSplitter,
+    TableDef,
     _ddl_rows,
     _file_chunks,
     parse_create_table,
     parse_insert,
     split_statements,
+    strings,
+    typed,
 )
 
 #: default split size for executor-side parsing
 _SPLIT_BYTES = 8 << 20
 
 
-@dataclass
-class _Range(InputPartition):
-    start: int
-    end: int
-
-
-def _scan_header(path: str, table: str):
-    """Driver-side pre-scan: the table's CREATE TABLE statement →
-    (schema, ddl column order). Metadata-only; stops at the DDL."""
+def _table_def(path: str, table: str) -> TableDef:
+    """Driver-side pre-scan: the table's CREATE TABLE statement.
+    Metadata-only; stops at the DDL."""
     for stmt in split_statements(_file_chunks(path)):
         td = parse_create_table(stmt)
         if td is not None and td.name == table:
-            return td.schema, td.names
+            return td
     raise ValueError(f"table {table!r} has no CREATE TABLE in {path}")
+
+
+def _raw_schema(td: TableDef) -> StructType:
+    return StructType([StructField(c, StringType(), True) for c in td.names])
+
+
+def read_table(spark: SparkSession, path: str, table: str, split_bytes: int = _SPLIT_BYTES) -> DataFrame:
+    """``table`` of the dump at ``path``, typed by the DDL, parsed on
+    the executors in ``split_bytes`` byte ranges. The header is scanned
+    once, here: the raw read is handed its schema."""
+    td = _table_def(path, table)
+    register(spark)
+    raw = (
+        spark.read.format("sqldump")
+        .schema(_raw_schema(td))
+        .option("path", path)
+        .option("table", table)
+        .option("split_bytes", split_bytes)
+        .load()
+    )
+    return typed(raw, td)
 
 
 class SqlDumpDataSource(DataSource):
@@ -87,89 +110,44 @@ class SqlDumpDataSource(DataSource):
         return "sqldump"
 
     def schema(self):
-        # cache the header scan: reader() reuses it instead of
-        # re-parsing the dump from byte 0 a second time (the serial
-        # driver-side statement split is paid once per read, not twice
-        # — review finding; multi-GB dumps with late DDL pay double)
-        schema, cols = _scan_header(
-            self.options["path"], self.options["table"]
-        )
-        self._header = (schema, cols)
-        return schema
+        return _raw_schema(_table_def(self.options["path"], self.options["table"]))
 
     def reader(self, schema: StructType) -> "SqlDumpReader":
-        cols = getattr(self, "_header", (None, None))[1]
-        return SqlDumpReader(schema, self.options, columns=cols)
+        typed_fields = [f.name for f in schema.fields if not isinstance(f.dataType, StringType)]
+        if typed_fields:
+            raise ValueError(
+                f"format('sqldump') reads STRING columns, not {typed_fields}: "
+                "use sqldump_datasource.read_table for the DDL's types"
+            )
+        return SqlDumpReader(schema, self.options)
 
 
 class SqlDumpReader(DataSourceReader):
-    def __init__(self, schema: StructType, options, columns=None) -> None:
-        self.schema = schema
+    def __init__(self, schema: StructType, options) -> None:
+        self.columns = schema.fieldNames()  # the DDL's order
         self.path = options["path"]
         self.table = options["table"]
         self.split_bytes = int(options.get("split_bytes", _SPLIT_BYTES))
-        if columns is None:  # user-supplied schema skipped schema()
-            _, columns = _scan_header(self.path, self.table)
-        self.columns = columns
 
     def partitions(self):
         import os
 
-        size = os.path.getsize(self.path)
-        ranges = []
-        start = 0
-        while start < size:
-            ranges.append(_Range(start, min(start + self.split_bytes, size)))
-            start += self.split_bytes
-        return ranges or [_Range(0, 0)]
+        size, step = os.path.getsize(self.path), self.split_bytes
+        ranges = [(s, min(s + step, size)) for s in range(0, size, step)] or [(0, 0)]
+        return [InputPartition(r) for r in ranges]
 
-    def read(self, partition: _Range):
-        from datetime import date, datetime
-        from decimal import Decimal
-
-        types = [f.dataType.simpleString() for f in self.schema.fields]
-
-        def convert(raw, t):
-            if raw is None:
-                return None
-            try:
-                if t == "bigint":
-                    return int(float(raw)) if "." in raw else int(raw)
-                if t == "double":
-                    return float(raw)
-                if t.startswith("decimal"):
-                    return Decimal(raw)
-                if t == "boolean":
-                    return raw.lower() in ("1", "true", "t")
-                if t == "date":
-                    return date.fromisoformat(raw[:10])
-                if t == "timestamp":
-                    return datetime.fromisoformat(raw)
-                if t == "binary":
-                    return raw.encode("utf-8")
-            except (ValueError, ArithmeticError):
-                return None
-            return raw
-
-        def emit(stmt: str):
-            parsed = parse_insert(stmt.strip())
-            if parsed is None:
-                return
-            tname, cols, rows = parsed
-            if tname != self.table:
-                return
-            for r in _ddl_rows(self.columns, cols, rows):
-                yield tuple(convert(v, t) for v, t in zip(r, types))
-
+    def read(self, partition: InputPartition):
+        start, end = partition.value
+        rows: list[list] = []
         with open(self.path, "rb") as f:
-            if partition.start > 0:
-                f.seek(partition.start)
+            if start > 0:
+                f.seek(start)
                 f.readline()  # partial line: owned by the previous split
             while True:
                 pos = f.tell()
                 # a line starting at exactly `end` is ours (the next
                 # split discards it as its first line)
-                if pos > partition.end:
+                if pos > end:
                     break
                 bline = f.readline()
                 if not bline:
@@ -180,8 +158,8 @@ class SqlDumpReader(DataSourceReader):
                 # lines of a multi-line VALUES list start with '(' and
                 # comments with '-'/'/' — both skipped, so a split
                 # never re-parses the middle of a statement another
-                # split owns. emit() keeps only INSERTs for our table,
-                # so non-INSERT statements fed here cost one scan and
+                # split owns. Only INSERTs for our table are kept, so
+                # non-INSERT statements fed here cost one scan and
                 # produce nothing.
                 if not line.lstrip()[:1].isalpha():
                     continue
@@ -200,7 +178,15 @@ class SqlDumpReader(DataSourceReader):
                         break
                     stmts.extend(sp.feed(nxt.decode("utf-8", errors="replace")))
                 for stmt in stmts:
-                    yield from emit(stmt)
+                    parsed = parse_insert(stmt.strip())
+                    if parsed is None or parsed[0] != self.table:
+                        continue
+                    rows.extend(_ddl_rows(self.columns, parsed[1], parsed[2]))
+                    if len(rows) >= _BATCH_ROWS:
+                        yield from strings(self.columns, rows).to_batches()
+                        rows = []
+        if rows:
+            yield from strings(self.columns, rows).to_batches()
 
 
 def register(spark) -> None:

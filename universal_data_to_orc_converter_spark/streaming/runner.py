@@ -60,7 +60,7 @@ def stream_partitions(spark: SparkSession):
     queries planned concurrently by another driver thread can still
     observe the narrow value — harmless: the registry is
     partition-count invariant, proven by
-    scripts/partition_invariance_audit.py.)
+    scripts/conf_invariance_audit.py spark.sql.shuffle.partitions 5.)
 
     Wrap only the ``.start()`` call: the lock is held for the whole
     block, so anything else inside it (waiting on the query, reading
