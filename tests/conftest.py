@@ -104,6 +104,13 @@ def assert_frames_match(spark_df, duck_rel, name="", allow_complex=False):
     assert not mism, f"{name}: {len(mism)} mismatched rows; first: {mism[:3]}"
 
 
+def insert_rows(ins):
+    """A ``sqldump.parse_insert`` result's values as rows (lists), each
+    column checked to hold one value per row."""
+    assert all(len(v) == ins.n for v in ins.values), ins
+    return [list(r) for r in zip(*ins.values)] if ins.values else [[] for _ in range(ins.n)]
+
+
 def _write_documents(spark, tmp_path, docs):
     """Write a documents.parquet fixture with the catalog schema."""
     import pandas as pd

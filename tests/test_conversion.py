@@ -33,7 +33,7 @@ from universal_data_to_orc_converter_spark.sources.sqldump import (
     split_statements,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, insert_rows
 
 
 def rows_set(df):
@@ -187,7 +187,8 @@ def test_parse_create_table_backslash_escaped_comment():
 
 def test_parse_insert_adversarial_literals():
     stmts = list(split_statements(iter([DUMP])))
-    table, cols, rows = parse_insert(stmts[1])
+    ins = parse_insert(stmts[1])
+    table, cols, rows = ins.table, ins.cols, insert_rows(ins)
     assert table == "users" and cols is None
     assert len(rows) == 3
     assert rows[0][2] == "likes (parens), commas, and; semicolons"
@@ -233,6 +234,23 @@ def test_convert_sql_dump_missing_table_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="'nope'.*no CREATE TABLE"):
         convert_sql_dump(spark, str(p), str(out), tables=["users", "nope"])
     assert not out.exists()
+
+
+def test_convert_sql_dump_schema_qualified_table(spark, tmp_path):
+    """A table named with its schema (`db`.`t`, db.t) converts under
+    its table name; both statements used to be skipped without a
+    word."""
+    p = tmp_path / "q.sql"
+    p.write_text(
+        "CREATE TABLE `db`.`t` (id INT, s TEXT);\n"
+        "INSERT INTO `db`.`t` VALUES (1, 'a');\n"
+        "INSERT INTO db.t VALUES (2, 'b');\n"
+    )
+    written = convert_sql_dump(spark, str(p), str(tmp_path / "orc"))
+    assert set(written) == {"t"}
+    t = read_orc(spark, written["t"])
+    assert t.schema.simpleString() == "struct<id:bigint,s:string>"
+    assert sorted(map(tuple, t.collect())) == [(1, "a"), (2, "b")]
 
 
 # values that must survive the parser, the string batches handed to

@@ -194,6 +194,20 @@ def test_raw_format_reads_strings_in_ddl_order(registered, tmp_path):
     ]
 
 
+def test_explicit_column_list_matches_names_case_insensitively(registered, tmp_path):
+    """MySQL column names are case-insensitive: an explicit INSERT
+    column list spelled in another case than the DDL fills the DDL's
+    columns in both readers (both used to read the row as all NULL)."""
+    spark = registered
+    p = tmp_path / "case.sql"
+    p.write_text(
+        "CREATE TABLE t (id INT, name TEXT);\n"
+        "INSERT INTO t (ID, Name) VALUES (1,'a');\n"
+    )
+    assert [tuple(r) for r in parse_dump(spark, str(p))["t"].collect()] == [(1, "a")]
+    assert [tuple(r) for r in read_table(spark, str(p), "t").collect()] == [(1, "a")]
+
+
 def test_raw_format_rejects_a_typed_schema(registered, tmp_path):
     """A caller-supplied schema with a non-string field is an error that
     names read_table, not a silent cast by another rule."""

@@ -7,21 +7,28 @@ untyped, unnamed DataFrame (sh:382). That corrupts any string literal
 containing a comma, parenthesis, or semicolon, and throws away the
 DDL's column names and types.
 
-This module is the deliberate divergence (SURVEY.md §7): one MySQL
-lexer, the compiled ``_TOKEN`` regex, is the only code that knows the
-quoting rules — 'single' and "double" strings with backslash and
-doubled-quote escapes, `backtick` identifiers, ``--`` and ``/* */``
-comments. Statement splitting, the CREATE TABLE column list (read as
-a typed Spark schema) and the INSERT value tuples are all walks over
-its tokens, and ``_parse_value`` decodes a literal's escapes with one
-``re.sub``. Statements are split in a streaming pass (bounded memory —
-the reference reads the whole dump twice, sh:325/371). For both
-readers this module also owns the two steps after parsing: ``strings``
-builds the Arrow batch of string columns in which rows cross to the
-JVM (as the reference hands its writer Arrow, sh:382/389/391: no
-per-value type check or pickling), and ``typed`` is the one cast rule
-from those strings to the DDL's types. The distributed reader
-(``sqldump_datasource.py``) reuses the lexer and both steps.
+This module is the deliberate divergence (SURVEY.md §7): one set of
+MySQL quoting patterns (``_Q1``/``_Q2``/``_BT`` and the comments) is
+the only code that knows the quoting rules — 'single' and "double"
+strings with backslash and doubled-quote escapes, `backtick`
+identifiers, ``--`` and ``/* */`` comments. They are compiled twice:
+``_TOKEN`` lexes one token per element, ``_RUN`` lexes runs of elements
+with no ``;`` or comment in them, so the streaming statement splitter
+(bounded memory — the reference reads the whole dump twice,
+sh:325/371) sees a few tokens per statement rather than one per value.
+An INSERT's tuples are matched whole, one regex per tuple of the first
+tuple's width, items quoted or bare; from the first tuple that does not
+match (ragged, nested, ``_utf8'x'``, a comment in it), the token walk
+(``_groups`` + ``_parse_value``) reads the rest. That walk also reads
+the CREATE TABLE column list (as a typed Spark schema) and is the
+reference the whole-tuple path is tested against; a literal's escapes
+are decoded with one ``re.sub``. For both readers this module also owns
+the two steps after parsing: ``strings`` builds the Arrow batch of
+string columns in which values cross to the JVM (as the reference
+hands its writer Arrow, sh:382/389/391: no per-value type check or
+pickling), and ``typed`` is the one cast rule from those strings to the
+DDL's types. The distributed reader (``sqldump_datasource.py``) reuses
+the parser and both steps.
 
 Scale posture: a .sql dump is an inherently serial, single-machine
 ingest format — the parse is driver-side by design, but memory is
@@ -31,12 +38,14 @@ executors. For 100 TB ingest use the JDBC or columnar sources.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import re
 from collections.abc import Iterator
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -85,28 +94,32 @@ def mysql_type_to_spark(type_sql: str) -> T.DataType:
 # The lexer: the one place that encodes MySQL's quote, escape and comment rules
 # ---------------------------------------------------------------------------
 
-#: An unterminated quote or comment runs to the end of the text (the
-#: ``\Z`` branches), so the tokens tile the text with no gaps: a caller
-#: can rebuild any span by joining them.
-_TOKEN = re.compile(
-    r"""
-      '[^'\\]*(?:(?:\\.|'')[^'\\]*)*(?:'|\\?\Z)   # 'string', \x and '' escapes
-    | "[^"\\]*(?:(?:\\.|"")[^"\\]*)*(?:"|\\?\Z)   # "string", \x and "" escapes
-    | `[^`]*(?:``[^`]*)*(?:`|\Z)                   # `identifier`
-    | --[^\n]*                                      # -- comment; the newline stays
-    | /\*.*?(?:\*/|\Z)                              # /* comment */
-    | [(),;]
-    | (?:[^'"`(),;/-]+|-(?!-)|/(?!\*))+             # any other text
-    """,
-    re.S | re.X,
-)
+#: the body of a 'string' / "string" (\x and doubled-quote escapes) and
+#: of a `identifier`, each after its opening quote
+_Q1 = r"[^'\\]*(?:(?:\\.|'')[^'\\]*)*"
+_Q2 = r'[^"\\]*(?:(?:\\.|"")[^"\\]*)*'
+_BT = r"[^`]*(?:``[^`]*)*"
+#: a quoted string or identifier. An unterminated one (or comment) runs
+#: to the end of the text (the ``\Z`` branches), so the tokens tile the
+#: text with no gaps: a caller can rebuild any span by joining them.
+_QUOTED = rf"""'{_Q1}(?:'|\\?\Z)|"{_Q2}(?:"|\\?\Z)|`{_BT}(?:`|\Z)"""
+#: -- comment (the newline stays) | /* comment */
+_COMMENTS = r"--[^\n]*|/\*.*?(?:\*/|\Z)"
+#: a '-' or '/' that starts no comment
+_DASH = r"-(?!-)|/(?!\*)"
+#: The lexer: one token per quoted element, comment, ``( ) , ;`` or run
+#: of other text.
+_TOKEN = re.compile(rf"{_QUOTED}|{_COMMENTS}|[(),;]|(?:[^'\"`(),;/-]+|{_DASH})+", re.S)
+#: The same rules, lexed in runs for the statement splitter: a token is
+#: a comment, a ``;``, or a run of up to 256 elements with neither in
+#: it, an element being a quoted one or other text (``( ) ,`` included).
+#: The bound keeps re-lexing a held-back run cheap.
+_RUN = re.compile(rf";|{_COMMENTS}|(?:{_QUOTED}|[^'\"`;/-]+|{_DASH}){{1,256}}", re.S)
 _COMMENT = ("--", "/*")
-#: the tokens that stay whole whatever text follows them
-_PUNCT = frozenset("(),;")
 
 
 class StatementSplitter:
-    """Incremental statement splitter over ``_TOKEN``.
+    """Incremental statement splitter over ``_RUN``.
 
     ``feed(text)`` returns the statements completed (by a top-level
     ``;``) within the text fed so far; ``pending`` is the unterminated
@@ -122,16 +135,16 @@ class StatementSplitter:
         self._parts: list[str] = []  # tokens of the open statement
         # The last token fed: it touches the end of the text, so the
         # next chunk may extend it ('-' + '-', '/' + '*', an open quote,
-        # or a closed one that a doubled quote reopens). Only it is
-        # lexed again with that chunk, so the work is linear in the
-        # text unless one token spans many chunks.
+        # a closed one that a doubled quote reopens, or a run that goes
+        # on). Only it is lexed again with that chunk, so the work is
+        # linear in the text unless one quoted string spans many chunks.
         self._tail = ""
 
     def feed(self, text: str) -> list[str]:
         out: list[str] = []
         parts = self._parts
-        toks = _TOKEN.findall(self._tail + text)
-        self._tail = toks.pop() if toks and toks[-1] not in _PUNCT else ""
+        toks = _RUN.findall(self._tail + text)
+        self._tail = toks.pop() if toks and toks[-1] != ";" else ""
         for tok in toks:
             if tok == ";":
                 stmt = "".join(parts).strip()
@@ -205,9 +218,11 @@ def _groups(text: str) -> Iterator[list[str]]:
 # CREATE TABLE / INSERT parsing
 # ---------------------------------------------------------------------------
 
-_CREATE_RE = re.compile(r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[`\"]?(\w+)[`\"]?\s*\(", re.I | re.S)
+#: a table name, keyed by its last part: ``t``, ```t```, ``db.t``, ```db`.`t```
+_TABLE = r"(?:[`\"]?\w+[`\"]?\.)?[`\"]?(\w+)[`\"]?"
+_CREATE_RE = re.compile(rf"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?{_TABLE}\s*\(", re.I | re.S)
 _INSERT_RE = re.compile(
-    r"^\s*INSERT\s+(?:IGNORE\s+)?INTO\s+[`\"]?(\w+)[`\"]?\s*(\([^)]*\))?\s*VALUES\s*",
+    rf"^\s*INSERT\s+(?:IGNORE\s+)?INTO\s+{_TABLE}\s*(\([^)]*\))?\s*VALUES\s*",
     re.I | re.S,
 )
 _CONSTRAINT_PREFIX = re.compile(
@@ -253,49 +268,128 @@ _ESCAPES = {
 _ESCAPE_RE = re.compile(r"\\(.)|(['\"])\2", re.S)
 
 
+def _unquote(body: str, q: str) -> str:
+    """The text of a ``q``-quoted literal whose body is ``body``."""
+    if "\\" not in body and q not in body:
+        return body  # no escape can be in it
+    # One left-to-right pass: backslash escapes and doubled-quote
+    # escapes are consumed together, so the output of one rule can
+    # never be re-consumed by another ('a\'\'b' is a''b, not a'b —
+    # MySQL semantics, where \x for unknown x is x). A doubled
+    # quote of the other kind is not an escape and stays as it is.
+    return _ESCAPE_RE.sub(
+        lambda m: _ESCAPES.get(m[1], m[1]) if m[1] else (q if m[2] == q else m[0]),
+        body,
+    )
+
+
 def _parse_value(tok: str):
     tok = tok.strip()
     if not tok or tok.upper() == "NULL":
         return None
     q = tok[0]
     if q in ("'", '"') and tok[-1] == q and len(tok) >= 2:
-        body = tok[1:-1]
-        if "\\" not in body and q not in body:
-            return body  # no escape can be in it
-        # One left-to-right pass: backslash escapes and doubled-quote
-        # escapes are consumed together, so the output of one rule can
-        # never be re-consumed by another ('a\'\'b' is a''b, not a'b —
-        # MySQL semantics, where \x for unknown x is x). A doubled
-        # quote of the other kind is not an escape and stays as it is.
-        return _ESCAPE_RE.sub(
-            lambda m: _ESCAPES.get(m[1], m[1]) if m[1] else (q if m[2] == q else m[0]),
-            body,
-        )
+        return _unquote(tok[1:-1], q)
     return tok  # numeric / literal — cast later against the schema
 
 
-def parse_insert(stmt: str) -> tuple[str, list[str] | None, list[list]] | None:
-    """Return (table, explicit columns or None, rows of raw values)."""
+# One tuple item as a whole: a complete 'string' or "string" (its body
+# captured) or a run of bare words (NULL, numbers). A bare word has no
+# quote, no ( ) , ; and no comment start; each of its characters can
+# match one way only, so a failed match backtracks in linear time.
+_WORD_CH = r"[^\s'\"`(),;/-]"
+_WORD = rf"(?:{_WORD_CH}|{_DASH}){_WORD_CH}*(?:(?:{_DASH}){_WORD_CH}*)*"
+_VALUE = rf"""\s*(?:'({_Q1})'|"({_Q2})"|({_WORD}(?:\s+{_WORD})*))\s*"""
+_ITEM = re.compile(_VALUE + "[,)]", re.S)
+
+
+def _tuple_width(stmt: str, pos: int) -> int:
+    """The number of items of the tuple at ``pos`` if every one is a
+    ``_VALUE``, else 0."""
+    if not stmt.startswith("(", pos):
+        return 0
+    width = 0
+    while m := _ITEM.match(stmt, pos + 1):
+        width += 1
+        pos = m.end() - 1
+        if stmt[pos] == ")":
+            return width
+    return 0
+
+
+@functools.lru_cache(maxsize=32)
+def _tuple_res(width: int) -> tuple[re.Pattern, re.Pattern]:
+    """The first and each later width-``width`` tuple of a VALUES list."""
+    tup = r"\(" + ",".join([_VALUE] * width) + r"\)"
+    return re.compile(tup, re.S), re.compile(r"\s*,\s*" + tup, re.S)
+
+
+def _decode(q1: tuple, q2: tuple, bare: tuple) -> list:
+    """One column of matched items as ``_parse_value`` reads them."""
+    return [
+        _unquote(a, "'") if a is not None
+        else _unquote(b, '"') if b is not None
+        else None if w.upper() == "NULL" else w
+        for a, b, w in zip(q1, q2, bare)
+    ]
+
+
+class Insert(NamedTuple):
+    table: str
+    #: the explicit ``INSERT (cols)`` list, or None
+    cols: list[str] | None
+    #: the number of rows (tuples)
+    n: int
+    #: one list of ``n`` raw values per item position; a short tuple's
+    #: missing items are None
+    values: list[list]
+
+
+def parse_insert(stmt: str) -> Insert | None:
+    """An INSERT statement's values, column by column. The tuples that
+    all have the first one's width and only ``_VALUE`` items are matched
+    whole by one regex each; the token walk (``_groups``) reads the rest
+    of the statement from the first tuple that is not."""
     m = _INSERT_RE.match(stmt)
     if not m:
         return None
     cols = None
     if m.group(2):
         cols = [c.strip().strip('`"') for c in m.group(2)[1:-1].split(",")]
-    rows = [[_parse_value(v) for v in row] for row in _groups(stmt[m.end() :])]
-    return m.group(1), cols, rows
+    pos, tuples = m.end(), []
+    width = _tuple_width(stmt, pos)
+    if width:
+        head, nxt = _tuple_res(width)
+        t = head.match(stmt, pos)
+        while t:
+            tuples.append(t.groups())
+            pos = t.end()
+            t = nxt.match(stmt, pos)
+    groups = list(zip(*tuples))
+    values = [_decode(*groups[i : i + 3]) for i in range(0, len(groups), 3)]
+    rest = [[_parse_value(v) for v in row] for row in _groups(stmt[pos:])]
+    if rest:  # both parts padded with None to the wider one
+        rest_values = list(itertools.zip_longest(*rest))
+        values = [
+            (values[i] if i < len(values) else [None] * len(tuples))
+            + (list(rest_values[i]) if i < len(rest_values) else [None] * len(rest))
+            for i in range(max(len(values), len(rest_values)))
+        ]
+    return Insert(m.group(1), cols, len(tuples) + len(rest), values)
 
 
-def _ddl_rows(columns: list[str], cols: list[str] | None, rows: list[list]) -> list[list]:
-    """An INSERT's ``rows`` in the DDL's column order: an explicit
-    ``INSERT (cols)`` list is reordered (a DDL column it omits is NULL),
-    and every row is padded with NULLs or truncated to the DDL's width."""
-    if cols:
-        order = {c: i for i, c in enumerate(cols)}
-        idx = [order.get(c) for c in columns]
-        return [[r[i] if i is not None and i < len(r) else None for i in idx] for r in rows]
-    width = len(columns)
-    return [r[:width] + [None] * (width - len(r)) for r in rows]
+def _ddl_values(names: list[str], ins: Insert) -> list[list]:
+    """An INSERT's values in the DDL's column order: an explicit
+    ``INSERT (cols)`` list is matched case-insensitively, as MySQL
+    matches names, and reordered; a DDL column the INSERT has no value
+    for is NULL."""
+    if ins.cols:
+        order = {c.casefold(): i for i, c in enumerate(ins.cols)}
+        idx = [order.get(c.casefold()) for c in names]
+    else:
+        idx = range(len(names))
+    width = len(ins.values)
+    return [ins.values[i] if i is not None and i < width else [None] * ins.n for i in idx]
 
 
 # ---------------------------------------------------------------------------
@@ -307,23 +401,22 @@ def _ddl_rows(columns: list[str], cols: list[str] | None, rows: list[list]) -> l
 _BATCH_ROWS = 50_000
 
 
-def strings(names: list[str], rows: list[list]):
-    """``rows`` (in ``names`` order, values ``str`` or None) as a
+def strings(names: list[str], columns: list[list]):
+    """``columns`` (one list per name, values ``str`` or None) as a
     ``pyarrow.Table`` of string columns, one record batch — the only
     form in which parsed dump values cross to the JVM."""
     import pyarrow as pa
 
-    return pa.table(
-        [pa.array([r[i] for r in rows], pa.string()) for i in range(len(names))],
-        names=names,
-    )
+    return pa.table([pa.array(c, pa.string()) for c in columns], names=names)
 
 
 def typed(raw: DataFrame, td: TableDef) -> DataFrame:
     """The one cast rule for dump values: ``raw``'s string columns cast to
     the DDL's types on the executors. A value the type cannot hold (a
-    zero date, text or an overflowing number in an INT) becomes NULL."""
-    return raw.select(*[F.col(c).try_cast(t).alias(c) for c, t in td.columns])
+    zero date, text or an overflowing number in an INT) becomes NULL.
+    One ``selectExpr`` builds the projection (a DDL name is ``\\w+``, so
+    it needs no escape inside backticks)."""
+    return raw.selectExpr(*[f"try_cast(`{c}` AS {t.simpleString()}) AS `{c}`" for c, t in td.columns])
 
 
 def parse_dump(
@@ -342,12 +435,13 @@ def parse_dump(
     table-subset option, sh:332-333); a listed table with no CREATE
     TABLE in the dump is a ``ValueError``."""
     defs: dict[str, TableDef] = {}
-    pending: dict[str, list[list]] = {}
+    pending: dict[str, list[list]] = {}  # one list per DDL column
     frames: dict[str, DataFrame] = {}
 
     def flush(tname: str) -> None:
         td = defs[tname]
-        df = typed(spark.createDataFrame(strings(td.names, pending.pop(tname, []))), td)
+        columns = pending.pop(tname, None) or [[] for _ in td.columns]
+        df = typed(spark.createDataFrame(strings(td.names, columns)), td)
         frames[tname] = frames[tname].unionByName(df) if tname in frames else df
 
     for stmt in split_statements(_file_chunks(path)):
@@ -357,18 +451,19 @@ def parse_dump(
                 defs[td.name] = td
             continue
         ins = parse_insert(stmt)
-        if ins is None or ins[0] not in defs:
+        if ins is None or ins.table not in defs:
             continue
-        tname, cols, rows = ins
-        buf = pending.setdefault(tname, [])
-        buf.extend(_ddl_rows(defs[tname].names, cols, rows))
-        if len(buf) >= _BATCH_ROWS:
-            flush(tname)
+        names = defs[ins.table].names
+        buf = pending.setdefault(ins.table, [[] for _ in names])
+        for col, vals in zip(buf, _ddl_values(names, ins)):
+            col.extend(vals)
+        if buf and len(buf[0]) >= _BATCH_ROWS:
+            flush(ins.table)
 
     missing = sorted(set(tables or ()) - set(defs))
     if missing:
         raise ValueError(f"tables {missing} have no CREATE TABLE in {path}")
     for tname in defs:  # the last batch; a table with no rows is empty
-        if pending.get(tname) or tname not in frames:
+        if any(pending.get(tname, ())) or tname not in frames:
             flush(tname)
     return {tname: frames[tname] for tname in defs}

@@ -57,7 +57,7 @@ from .sqldump import (
     _BATCH_ROWS,
     StatementSplitter,
     TableDef,
-    _ddl_rows,
+    _ddl_values,
     _file_chunks,
     parse_create_table,
     parse_insert,
@@ -138,7 +138,7 @@ class SqlDumpReader(DataSourceReader):
 
     def read(self, partition: InputPartition):
         start, end = partition.value
-        rows: list[list] = []
+        columns: list[list] = [[] for _ in self.columns]  # one list per DDL column
         with open(self.path, "rb") as f:
             if start > 0:
                 f.seek(start)
@@ -178,15 +178,16 @@ class SqlDumpReader(DataSourceReader):
                         break
                     stmts.extend(sp.feed(nxt.decode("utf-8", errors="replace")))
                 for stmt in stmts:
-                    parsed = parse_insert(stmt.strip())
-                    if parsed is None or parsed[0] != self.table:
+                    ins = parse_insert(stmt.strip())
+                    if ins is None or ins.table != self.table:
                         continue
-                    rows.extend(_ddl_rows(self.columns, parsed[1], parsed[2]))
-                    if len(rows) >= _BATCH_ROWS:
-                        yield from strings(self.columns, rows).to_batches()
-                        rows = []
-        if rows:
-            yield from strings(self.columns, rows).to_batches()
+                    for col, vals in zip(columns, _ddl_values(self.columns, ins)):
+                        col.extend(vals)
+                    if columns and len(columns[0]) >= _BATCH_ROWS:
+                        yield from strings(self.columns, columns).to_batches()
+                        columns = [[] for _ in self.columns]
+        if any(columns):
+            yield from strings(self.columns, columns).to_batches()
 
 
 def register(spark) -> None:
