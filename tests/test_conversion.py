@@ -23,7 +23,9 @@ from universal_data_to_orc_converter_spark.converter import (
     convert_csv,
     convert_sql_dump,
 )
+from universal_data_to_orc_converter_spark.registry import load_all_queries
 from universal_data_to_orc_converter_spark.sinks.orc import read_orc, write_orc
+from universal_data_to_orc_converter_spark.sources import sqldump
 from universal_data_to_orc_converter_spark.sources.csv import read_csv
 from universal_data_to_orc_converter_spark.sources.sqldump import (
     mysql_type_to_spark,
@@ -33,7 +35,7 @@ from universal_data_to_orc_converter_spark.sources.sqldump import (
     split_statements,
 )
 
-from .conftest import SF_SMOKE, insert_rows
+from .conftest import SF_DIR, SF_SMOKE, assert_frames_match, insert_rows
 
 
 def rows_set(df):
@@ -355,6 +357,100 @@ def test_parse_dump_hands_spark_only_arrow_tables(spark, tmp_path, monkeypatch):
     assert set(dfs) == {"users", "tags"}
     assert len(seen) == 2
     assert all(isinstance(d, pa.Table) for d in seen), [type(d) for d in seen]
+
+
+def _plan_nodes(plan, in_codegen=False):
+    """Each node of an executed plan, with whether a whole-stage
+    codegen stage holds it."""
+    yield plan, in_codegen
+    in_codegen = in_codegen or plan.nodeName().startswith("WholeStageCodegen")
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i), in_codegen)
+
+
+def _assert_scans_arrow_rdd(df):
+    nodes = [n.nodeName() for n, _ in _plan_nodes(df._jdf.queryExecution().executedPlan())]
+    assert "LocalTableScan" not in nodes, nodes
+    assert any(n.startswith("Scan ") and n.endswith(" arrow") for n in nodes), nodes
+
+
+def test_parse_dump_casts_in_codegen_on_an_arrow_rdd(spark, oracle, tmp_path):
+    """Parsed batches reach Spark as an RDD of Arrow batches, so the
+    try_cast projection runs compiled in the tasks that read them. A
+    driver-side local relation would have the optimizer fold the cast
+    row by row in the driver's interpreter instead."""
+    p = tmp_path / "d.sql"
+    p.write_text(DUMP)
+    users = parse_dump(spark, str(p))["users"]
+    _assert_scans_arrow_rdd(users)
+    casts = [
+        codegen
+        for node, codegen in _plan_nodes(users._jdf.queryExecution().executedPlan())
+        if node.nodeName() == "Project" and "try_cast" in node.toString()
+    ]
+    assert casts == [True]
+    # the one operator that builds a frame from Arrow stays exact
+    spec = load_all_queries()["op_arrow_interchange"]
+    sdf = spec.fn(spark, SF_DIR)
+    _assert_scans_arrow_rdd(sdf)
+    assert_frames_match(sdf, oracle.sql(spec.oracle), spec.name)
+
+
+def test_convert_sql_dump_same_at_any_arrow_batch_width(spark, tmp_path, monkeypatch):
+    """Partitions follow Arrow batches, so the rows and schema written
+    must not depend on ``arrow.maxRecordsPerBatch``: 7 rows per batch
+    against the ambient width, over several unioned parse batches."""
+    monkeypatch.setattr(sqldump, "_BATCH_ROWS", 10)
+    p = tmp_path / "w.sql"
+    p.write_text(
+        "CREATE TABLE t (id INT, s TEXT, d DATE, x DECIMAL(6,2));\n"
+        + "".join(
+            f"INSERT INTO t VALUES ({3 * i}, 's{i}', '2024-01-{i % 28 + 1:02d}', {i}.5),"
+            f" ({3 * i + 1}, NULL, '0000-00-00', 'x'), ({3 * i + 2}, 'it''s', NULL, -{i});\n"
+            for i in range(14)
+        )
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    ambient = spark.conf.get(key)
+
+    def run(tag):
+        parts = parse_dump(spark, str(p))["t"].rdd.getNumPartitions()
+        t = read_orc(spark, convert_sql_dump(spark, str(p), str(tmp_path / tag))["t"])
+        return parts, t.schema, sorted(map(tuple, t.collect()))
+
+    base_parts, base_schema, base_rows = run("ambient")
+    try:
+        spark.conf.set(key, "7")
+        parts, schema, rows = run("narrow")
+    finally:
+        spark.conf.set(key, ambient)
+    # 42 rows in batches of 12, 12, 12, 6: 4 partitions, or 7 at width 7
+    assert (base_parts, parts) == (4, 7)
+    assert schema == base_schema
+    assert rows == base_rows and len(rows) == 42
+
+
+def test_parse_dump_same_table_in_two_databases_raises(spark, tmp_path):
+    """Tables are keyed by their name without its schema, so two
+    databases' ``t`` would merge: db1's rows were cast under db2's types
+    (same width) or failed inside pyarrow (other width). The second
+    CREATE TABLE is an error that names both and the remedy."""
+    for db2_columns in ("b TEXT, c DATE", "b TEXT"):
+        p = tmp_path / "two.sql"
+        p.write_text(
+            "CREATE TABLE `db1`.`t` (a INT, s TEXT);\n"
+            "INSERT INTO `db1`.`t` VALUES (1, 'x');\n"
+            f"CREATE TABLE `db2`.`t` ({db2_columns});\n"
+            "INSERT INTO `db2`.`t` VALUES ('y', '2024-01-01');\n"
+        )
+        out = tmp_path / "orc"
+        with pytest.raises(
+            ValueError,
+            match=r"'t' is created twice .* as `db1`\.`t` and as `db2`\.`t`.*split the dump per database",
+        ):
+            convert_sql_dump(spark, str(p), str(out))
+        assert not out.exists()
 
 
 def test_mysql_type_mapping():

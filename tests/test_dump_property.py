@@ -14,8 +14,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from universal_data_to_orc_converter_spark.sources import sqldump
 from universal_data_to_orc_converter_spark.sources.sqldump import (
     _INSERT_RE,
+    StatementSplitter,
     _groups,
     _parse_value,
     parse_create_table,
@@ -209,6 +211,48 @@ def test_split_long_insert_same_at_every_chunk_size(size):
     text, stmts = _mysqldump_text(200)
     chunks = (text[i : i + size] for i in range(0, len(text), size))
     assert list(split_statements(chunks)) == stmts
+
+
+# a hand-written dump: string literals holding raw newlines (one over
+# 2000 lines, one with doubled quotes and a backslash before a line
+# end, a "double-quoted" one) and a block comment over many lines
+_LONG_LITERAL_DUMP = (
+    "CREATE TABLE t (a INT, s TEXT);\n"
+    + "INSERT INTO t VALUES (1,'"
+    + "".join(f"line {i}; ''quoted'' -- not /* a comment\n" for i in range(2000))
+    + "'),\n(2,'it''\n''s\\\n'),\n(3,\"x\n\n\n\");\n"
+    + "/* " + "comment;\n" * 500 + "*/INSERT INTO t VALUES (4,'-');\n"
+)
+
+
+@pytest.mark.parametrize("chunking", ["lines", "37 chars"])
+def test_split_long_literal_lexes_each_chunk_once(monkeypatch, chunking):
+    """Fed line by line, as the distributed reader feeds a statement
+    (or in small chunks), a literal or comment that spans many chunks
+    is resumed, not lexed again from its start with every chunk: the
+    lexer sees each character of the dump a bounded number of times,
+    and the statements equal a one-chunk feed."""
+    text = _LONG_LITERAL_DUMP
+    whole = list(split_statements(iter([text])))
+    assert len(whole) == 3 and whole[1].count("\n") == 2007
+    run, lexed = sqldump._RUN, []
+
+    class Counting:
+        def findall(self, chunk):
+            lexed.append(len(chunk))
+            return run.findall(chunk)
+
+    monkeypatch.setattr(sqldump, "_RUN", Counting())
+    if chunking == "lines":
+        chunks = text.splitlines(keepends=True)
+    else:
+        chunks = [text[i : i + 37] for i in range(0, len(text), 37)]
+    sp, got = StatementSplitter(), []
+    for chunk in chunks:
+        got += sp.feed(chunk)
+    assert got == whole
+    assert sum(lexed) <= 2 * len(text), (sum(lexed), len(text))
+    assert not sp.open and sp.pending == ""
 
 
 # Long tuples that the whole-tuple regex starts to match and fails on

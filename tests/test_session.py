@@ -77,6 +77,7 @@ def test_default_posture(posture):
         "spark.sql.orc.enableVectorizedReader": "true",
         "spark.sql.parquet.filterPushdown": "true",
         "spark.sql.files.maxPartitionBytes": "1m",
+        "spark.sql.execution.arrow.localRelationThreshold": "0",
     }
     assert tuned == shared
     assert built == {

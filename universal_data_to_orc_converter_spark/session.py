@@ -15,6 +15,15 @@ One place to encode the engine's execution posture:
 * **shuffle.partitions** sized for the local test harness; on a real
   cluster AQE's ``coalescePartitions`` makes the initial number mostly
   a ceiling, so a larger value is safe at scale.
+* **Arrow tables always cross to the JVM as an RDD**
+  (``arrow.localRelationThreshold`` 0). Under Spark's 48 MB default a
+  smaller ``createDataFrame(pyarrow.Table or pandas)`` becomes a
+  driver-side ``LocalRelation``, and the optimizer then folds any
+  projection over it (``sqldump.typed``'s ``try_cast``) row by row in
+  the driver's interpreter. As an RDD, each Arrow batch is one
+  partition decoded on the executors, and the projection runs in
+  whole-stage codegen inside the job that consumes the frame (the ORC
+  write). Lists of rows take another path and are unaffected.
 """
 
 from __future__ import annotations
@@ -47,6 +56,7 @@ SESSION_CONF: dict[str, str] = {
     "spark.sql.orc.enableVectorizedReader": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": DEFAULT_MAX_PARTITION_BYTES,
+    "spark.sql.execution.arrow.localRelationThreshold": "0",
 }
 
 

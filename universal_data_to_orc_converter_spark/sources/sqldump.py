@@ -15,7 +15,9 @@ identifiers, ``--`` and ``/* */`` comments. They are compiled twice:
 ``_TOKEN`` lexes one token per element, ``_RUN`` lexes runs of elements
 with no ``;`` or comment in them, so the streaming statement splitter
 (bounded memory — the reference reads the whole dump twice,
-sh:325/371) sees a few tokens per statement rather than one per value.
+sh:325/371) sees a few tokens per statement rather than one per value,
+and carries at most three characters of lexer state from one chunk to
+the next, so a string that spans many chunks is not lexed again.
 An INSERT's tuples are matched whole, one regex per tuple of the first
 tuple's width, items quoted or bare; from the first tuple that does not
 match (ragged, nested, ``_utf8'x'``, a comment in it), the token walk
@@ -31,9 +33,14 @@ DDL's types. The distributed reader (``sqldump_datasource.py``) reuses
 the parser and both steps.
 
 Scale posture: a .sql dump is an inherently serial, single-machine
-ingest format — the parse is driver-side by design, but memory is
-O(batch), and everything downstream (type casting, ORC write) runs on
-executors. For 100 TB ingest use the JDBC or columnar sources.
+ingest format — the parse is driver-side by design. Python holds at
+most one ``_BATCH_ROWS`` batch per table; each batch is handed to the
+driver JVM as Arrow bytes, which it holds until the table is written.
+The session posture (``session.SESSION_CONF``) makes each batch RDD
+partitions rather than a driver-side local relation, so the Arrow
+decoding, the ``try_cast`` and the ORC write all run in the write's
+tasks on the executors. For 100 TB ingest use the JDBC or columnar
+sources.
 """
 
 from __future__ import annotations
@@ -110,12 +117,50 @@ _DASH = r"-(?!-)|/(?!\*)"
 #: The lexer: one token per quoted element, comment, ``( ) , ;`` or run
 #: of other text.
 _TOKEN = re.compile(rf"{_QUOTED}|{_COMMENTS}|[(),;]|(?:[^'\"`(),;/-]+|{_DASH})+", re.S)
+#: an element of a run: a quoted one, other text (``( ) ,`` included) or
+#: a dash
+_ELEMENT = rf"{_QUOTED}|[^'\"`;/-]+|{_DASH}"
 #: The same rules, lexed in runs for the statement splitter: a token is
 #: a comment, a ``;``, or a run of up to 256 elements with neither in
-#: it, an element being a quoted one or other text (``( ) ,`` included).
-#: The bound keeps re-lexing a held-back run cheap.
-_RUN = re.compile(rf";|{_COMMENTS}|(?:{_QUOTED}|[^'\"`;/-]+|{_DASH}){{1,256}}", re.S)
+#: it. The bound keeps the scan for the last token's last element short.
+_RUN = re.compile(rf";|{_COMMENTS}|(?:{_ELEMENT}){{1,256}}", re.S)
+_RUN_ELEMENT = re.compile(_ELEMENT, re.S)
+#: a quoted element: whether it is closed, else its unpaired trailing
+#: backslash (a quoted element is lexed the same way: greedy body first)
+_QUOTE_END = {
+    q: re.compile(rf"{q}(?:{body})(?:({q})|(\\?))", re.S)
+    for q, body in (("'", _Q1), ('"', _Q2), ("`", _BT))
+}
 _COMMENT = ("--", "/*")
+
+
+def _end_state(tok: str) -> str:
+    """The shortest text that leaves ``_RUN`` where the last token
+    ``tok`` (which ends the text lexed) leaves it: inside a comment or a
+    quoted element, just after a quote (a doubled quote reopens it), or
+    after a ``-`` or ``/`` (it may start a comment); '' between
+    elements."""
+    if tok.startswith("--"):  # its newline is not in it yet
+        return "--"
+    if tok.startswith("/*"):
+        if len(tok) >= 4 and tok.endswith("*/"):
+            return ""
+        return "/**" if len(tok) > 2 and tok.endswith("*") else "/*"
+    *_, last = _RUN_ELEMENT.finditer(tok)  # tok is a run
+    e = last[0]
+    if e[0] in _QUOTE_END:
+        closed, backslash = _QUOTE_END[e[0]].fullmatch(e).groups()
+        return e[0] + (closed or backslash)
+    return e if e in ("-", "/") else ""
+
+
+def _held(state: str) -> str:
+    """The text of the statement that ``state`` holds back: a quoted
+    state's opening quote is not it (the element's real opening quote
+    was kept with its body), and a comment is dropped."""
+    if state[:1] in _QUOTE_END:
+        return state[1:]
+    return "" if state.startswith(_COMMENT) else state
 
 
 class StatementSplitter:
@@ -123,42 +168,56 @@ class StatementSplitter:
 
     ``feed(text)`` returns the statements completed (by a top-level
     ``;``) within the text fed so far; ``pending`` is the unterminated
-    tail still buffered. State persists across ``feed`` calls, so a
-    caller can stream a file line-by-line without re-scanning — the
-    distributed dump reader uses this to handle multiple statements on
-    one physical line (and statements spanning several lines) without
-    dropping or duplicating any. Comments are dropped from the
-    statements.
+    tail still buffered and ``open`` says whether there is one. State
+    persists across ``feed`` calls, so a caller can stream a file
+    line-by-line without re-scanning — the distributed dump reader uses
+    this to handle multiple statements on one physical line (and
+    statements spanning several lines) without dropping or duplicating
+    any. Comments are dropped from the statements.
     """
 
     def __init__(self) -> None:
-        self._parts: list[str] = []  # tokens of the open statement
-        # The last token fed: it touches the end of the text, so the
-        # next chunk may extend it ('-' + '-', '/' + '*', an open quote,
-        # a closed one that a doubled quote reopens, or a run that goes
-        # on). Only it is lexed again with that chunk, so the work is
-        # linear in the text unless one quoted string spans many chunks.
-        self._tail = ""
+        # text of the open statement; whitespace before it is not kept,
+        # so the list is empty unless there is a statement
+        self._parts: list[str] = []
+        # The lexer's state at the end of the text fed so far, as at
+        # most three characters (``_end_state``) that are lexed again
+        # in front of the next chunk. The element they stand for is
+        # kept in ``_parts`` apart from ``_held(state)``, so the work is
+        # linear in the text: a quoted string that spans many chunks is
+        # resumed, not lexed again from its start.
+        self._state = ""
 
     def feed(self, text: str) -> list[str]:
         out: list[str] = []
         parts = self._parts
-        toks = _RUN.findall(self._tail + text)
-        self._tail = toks.pop() if toks and toks[-1] != ";" else ""
+        toks = _RUN.findall(self._state + text)
+        if not toks:
+            return out
+        # a quoted state's quote is already in ``_parts``
+        cut = 1 if self._state[:1] in _QUOTE_END else 0
+        self._state = "" if toks[-1] == ";" else _end_state(toks[-1])
+        if held := _held(self._state):
+            toks[-1] = toks[-1][: -len(held)]
         for tok in toks:
+            part, cut = tok[cut:], 0
             if tok == ";":
-                stmt = "".join(parts).strip()
-                parts.clear()
-                if stmt:
-                    out.append(stmt)
-            elif not tok.startswith(_COMMENT):
-                parts.append(tok)
+                if parts:
+                    out.append("".join(parts).strip())
+                    parts.clear()
+            elif part and not tok.startswith(_COMMENT) and (parts or not part.isspace()):
+                parts.append(part)
         return out
 
     @property
+    def open(self) -> bool:
+        """Whether an unterminated statement is buffered (as ``pending``
+        would say, without joining it)."""
+        return bool(self._parts or _held(self._state))
+
+    @property
     def pending(self) -> str:
-        tail = "" if self._tail.startswith(_COMMENT) else self._tail
-        return ("".join(self._parts) + tail).strip()
+        return ("".join(self._parts) + _held(self._state)).strip()
 
 
 def split_statements(chunks: Iterator[str]) -> Iterator[str]:
@@ -219,8 +278,10 @@ def _groups(text: str) -> Iterator[list[str]]:
 # ---------------------------------------------------------------------------
 
 #: a table name, keyed by its last part: ``t``, ```t```, ``db.t``, ```db`.`t```
-_TABLE = r"(?:[`\"]?\w+[`\"]?\.)?[`\"]?(\w+)[`\"]?"
-_CREATE_RE = re.compile(rf"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?{_TABLE}\s*\(", re.I | re.S)
+_TABLE = r"(?:[`\"]?\w+[`\"]?\.)?[`\"]?(?P<name>\w+)[`\"]?"
+_CREATE_RE = re.compile(
+    rf"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<ref>{_TABLE})\s*\(", re.I | re.S
+)
 _INSERT_RE = re.compile(
     rf"^\s*INSERT\s+(?:IGNORE\s+)?INTO\s+{_TABLE}\s*(\([^)]*\))?\s*VALUES\s*",
     re.I | re.S,
@@ -234,6 +295,8 @@ _CONSTRAINT_PREFIX = re.compile(
 class TableDef:
     name: str
     columns: list[tuple[str, T.DataType]] = field(default_factory=list)
+    #: the name as the CREATE TABLE writes it, schema qualifier included
+    ref: str = ""
 
     @property
     def names(self) -> list[str]:
@@ -244,7 +307,7 @@ def parse_create_table(stmt: str) -> TableDef | None:
     m = _CREATE_RE.match(stmt)
     if not m:
         return None
-    td = TableDef(m.group(1))
+    td = TableDef(m["name"], ref=m["ref"])
     # the column list is the group that opens at the regex's last '('
     for coldef in next(_groups(stmt[m.end() - 1 :]), []):
         coldef = coldef.strip()
@@ -412,8 +475,11 @@ def strings(names: list[str], columns: list[list]):
 
 def typed(raw: DataFrame, td: TableDef) -> DataFrame:
     """The one cast rule for dump values: ``raw``'s string columns cast to
-    the DDL's types on the executors. A value the type cannot hold (a
-    zero date, text or an overflowing number in an INT) becomes NULL.
+    the DDL's types. A value the type cannot hold (a zero date, text or
+    an overflowing number in an INT) becomes NULL. The projection runs
+    in whole-stage codegen in the tasks that read ``raw`` — on the
+    executors, as long as ``raw`` is not a driver-side local relation
+    (``session.SESSION_CONF`` keeps Arrow tables from becoming one).
     One ``selectExpr`` builds the projection (a DDL name is ``\\w+``, so
     it needs no escape inside backticks)."""
     return raw.selectExpr(*[f"try_cast(`{c}` AS {t.simpleString()}) AS `{c}`" for c, t in td.columns])
@@ -427,13 +493,17 @@ def parse_dump(
     """Parse a .sql dump into typed DataFrames, one per table.
 
     Values are materialized as strings: every ``_BATCH_ROWS`` rows of a
-    table cross to the JVM as one ``strings`` batch, and ``typed`` casts
-    them to the DDL's types on the executors (a narrow, codegen'd
-    projection) — the driver never does per-value type conversion, and
+    table cross to the JVM as one ``strings`` batch (under the session
+    posture, an RDD of ``arrow.maxRecordsPerBatch``-row partitions), and
+    ``typed`` casts them to the DDL's types in the tasks that consume
+    the frame (a narrow, codegen'd projection) — neither the Python
+    driver nor the driver JVM does per-value type conversion, and
     ``sqldump_datasource.read_table`` types its rows by the same rule.
     ``tables`` filters which tables to load (the reference's
     table-subset option, sh:332-333); a listed table with no CREATE
-    TABLE in the dump is a ``ValueError``."""
+    TABLE in the dump is a ``ValueError``, and so is a second CREATE
+    TABLE of a loaded table (tables are keyed by their name without a
+    schema, so ``db1.t`` and ``db2.t`` would merge)."""
     defs: dict[str, TableDef] = {}
     pending: dict[str, list[list]] = {}  # one list per DDL column
     frames: dict[str, DataFrame] = {}
@@ -447,6 +517,12 @@ def parse_dump(
     for stmt in split_statements(_file_chunks(path)):
         td = parse_create_table(stmt)
         if td is not None:
+            if td.name in defs:
+                raise ValueError(
+                    f"table {td.name!r} is created twice in {path}, as "
+                    f"{defs[td.name].ref} and as {td.ref}: tables are keyed by "
+                    "their name without its schema, so split the dump per database"
+                )
             if tables is None or td.name in tables:
                 defs[td.name] = td
             continue

@@ -171,7 +171,7 @@ class SqlDumpReader(DataSourceReader):
                 # top-level ';', even past `end`).
                 sp = StatementSplitter()
                 stmts = sp.feed(line)
-                while sp.pending:
+                while sp.open:
                     nxt = f.readline()
                     if not nxt:
                         stmts.append(sp.pending)
